@@ -7,6 +7,17 @@ SURVEY.md §2.3). Each completed (run_id, stage, bucket) appends one lineage
 row with metrics; resuming the same run_id anti-joins completed buckets and
 processes only the remainder. Lineage lives in the same TableIO seam as data
 (Iceberg append in production, parquet append in the sandbox).
+
+Per bucket, :class:`CheckpointedRun` makes 2 scans of the bucket's staged
+partition and 2 data writes, one Spark job each, and no collect: the
+violation rows are one scan and one write; one exchange-free rollup
+(``ValidationPlan.rollup``) is the other, written as the verdicts while an
+``Observation`` on it gathers the bucket totals — the lineage
+``rows``/``violations`` and the bucket's quality row. The quality and
+lineage rows are buffered and appended together in the batched
+:meth:`LineageLog.flush` — quality first, so a "done" lineage row implies
+its quality row exists — as JVM local relations, so the flush runs no
+Python-worker tasks.
 """
 
 from __future__ import annotations
@@ -15,10 +26,11 @@ import time
 from dataclasses import dataclass, field
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .plans.plan import VIOLATION_COLS
 from .sources.io import TableIO
 
 LINEAGE_SCHEMA = T.StructType([
@@ -34,10 +46,38 @@ LINEAGE_SCHEMA = T.StructType([
 
 LINEAGE_TABLE = "lineage"
 
+#: one row per bucket of a ``quality_checks`` run, partitioned by bucket:
+#: ``(key, order)`` uniqueness and per-key order-chain contiguity
+QUALITY_SCHEMA = T.StructType([
+    T.StructField("total_rows", T.LongType(), True),
+    T.StructField("distinct_keys", T.LongType(), True),
+    T.StructField("duplicate_rows", T.LongType(), True),
+    T.StructField("unique_passed", T.BooleanType(), True),
+    T.StructField("n_groups", T.LongType(), True),
+    T.StructField("broken_groups", T.LongType(), True),
+    T.StructField("contiguous_passed", T.BooleanType(), True),
+    T.StructField("bucket", T.IntegerType(), True),
+])
+
 
 def bucket_expr(key_col: str, num_buckets: int) -> F.Column:
     """Explicit conv_id hash-bucketing (SURVEY.md §2.3)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
+
+
+def _local_frame(spark: SparkSession, schema: T.StructType, rows: Sequence[tuple]) -> DataFrame:
+    """``rows`` as a JVM local relation: a parameterized ``VALUES`` that
+    plans as ``LocalTableScan``. ``createDataFrame(list)`` would instead
+    parallelize pickled rows through Python-worker tasks."""
+    args, tuples = {}, []
+    for i, row in enumerate(rows):
+        cells = []
+        for j, (f, v) in enumerate(zip(schema.fields, row)):
+            args[f"p{i}_{j}"] = v
+            cells.append(f"CAST(:p{i}_{j} AS {f.dataType.simpleString()})")
+        tuples.append(f"({', '.join(cells)})")
+    names = ", ".join(f"`{f.name}`" for f in schema.fields)
+    return spark.sql(f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})", args=args)
 
 
 @dataclass
@@ -48,16 +88,22 @@ class LineageLog:
     ``autoflush=False`` buffers records and appends them in batches via
     :meth:`flush` — CheckpointedRun uses this with periodic + final flushes;
     an unflushed record merely means that bucket re-processes idempotently
-    on resume."""
+    on resume. A record may carry the bucket's quality row, which the same
+    flush appends to ``quality_table`` before the lineage rows."""
 
     io: TableIO
     autoflush: bool = True
-    _buffer: List[Row] = field(default_factory=list)
+    quality_table: Optional[str] = None
+    _buffer: List[tuple] = field(default_factory=list)
+    _quality: List[tuple] = field(default_factory=list)
 
     def completed_buckets(self, run_id: str, stage: str) -> List[int]:
-        if not self.io.exists(LINEAGE_TABLE):
+        """Buckets marked done — ONE job: the read takes the known schema
+        (no inference pass), and the few matching rows dedupe here, not in
+        a shuffle. A missing lineage table means none."""
+        df = self.io.read_if_exists(LINEAGE_TABLE, LINEAGE_SCHEMA)
+        if df is None:
             return []
-        df = self.io.read(LINEAGE_TABLE)
         rows = (
             df.where(
                 (F.col("run_id") == run_id)
@@ -65,10 +111,9 @@ class LineageLog:
                 & (F.col("status") == "done")
             )
             .select("bucket")
-            .distinct()
             .collect()
         )
-        return sorted(r["bucket"] for r in rows)
+        return sorted({r["bucket"] for r in rows})
 
     def record(
         self,
@@ -79,31 +124,32 @@ class LineageLog:
         violations: int,
         wall_sec: float,
         status: str = "done",
+        quality: Optional[tuple] = None,
     ) -> None:
+        """Buffer one lineage row; ``quality`` is the bucket's
+        :data:`QUALITY_SCHEMA` row without its trailing ``bucket``."""
         import datetime
 
-        self._buffer.append(
-            Row(
-                run_id=run_id,
-                stage=stage,
-                bucket=int(bucket),
-                status=status,
-                rows=int(rows),
-                violations=int(violations),
-                wall_sec=float(wall_sec),
-                finished_at=datetime.datetime.now(),
-            )
-        )
+        self._buffer.append((
+            run_id, stage, int(bucket), status, int(rows), int(violations),
+            float(wall_sec), datetime.datetime.now(),
+        ))
+        if quality is not None:
+            self._quality.append((*quality, int(bucket)))
         if self.autoflush:
             self.flush()
 
     def flush(self) -> None:
-        """Append all buffered records in ONE write (no-op when empty)."""
-        if not self._buffer:
-            return
-        df = self.io.spark.createDataFrame(self._buffer, LINEAGE_SCHEMA)
-        self.io.append(df, LINEAGE_TABLE)
-        self._buffer = []
+        """Append all buffered records in ONE write per table — quality
+        rows first, then lineage (no-op when empty)."""
+        spark = self.io.spark
+        if self._quality:
+            df = _local_frame(spark, QUALITY_SCHEMA, self._quality)
+            self.io.append(df, self.quality_table, partition_by=["bucket"])
+            self._quality = []
+        if self._buffer:
+            self.io.append(_local_frame(spark, LINEAGE_SCHEMA, self._buffer), LINEAGE_TABLE)
+            self._buffer = []
 
 
 @dataclass
@@ -111,6 +157,16 @@ class CheckpointedRun:
     """Bucket-wise validation run: process each conv_id hash-bucket, append
     violations + verdicts per bucket, log lineage; ``resume=True`` skips
     buckets already marked done for this run_id.
+
+    Each bucket is one pass: 2 scans of its staged partition and 2 data
+    writes (violations, verdicts), 2 Spark jobs, with the rollup totals
+    observed during the verdict write and the ``quality_checks`` row batched
+    with the lineage rows (module docstring). ``order_col`` must name a
+    column of the input: the rollup always carries its chain statistics.
+    The ``bucket`` column is never a literal — the violations take the
+    staged ``_bucket`` partition column, the verdicts recompute
+    :func:`bucket_expr` of their key — so every bucket runs identical
+    generated code and hits Spark's codegen cache.
 
     At cluster scale each bucket is itself a distributed job over that
     bucket's partition-pruned slice; bucket granularity bounds re-work on
@@ -236,7 +292,9 @@ class CheckpointedRun:
         quality_checks: bool = False,
         order_col: str = "turn_idx",
     ) -> dict:
-        log = LineageLog(self.io, autoflush=False)
+        log = LineageLog(
+            self.io, autoflush=False, quality_table=f"quality_{self._safe_run_id}"
+        )
         done = set(log.completed_buckets(self.run_id, stage)) if resume else set()
         staged = self._stage_input(df, resume)
         processed, skipped = [], []
@@ -256,6 +314,10 @@ class CheckpointedRun:
         self, staged, plan, log, done, processed, skipped, keys, stage,
         fail_on_bucket, fail_before_record, quality_checks, order_col,
     ) -> None:
+        keys = list(keys)
+        violations_t = f"violations_{self._safe_run_id}"
+        verdicts_t = f"verdicts_{self._safe_run_id}"
+        outputs = [violations_t, verdicts_t] + ([log.quality_table] if quality_checks else [])
         for b in range(self.num_buckets):
             if b in done:
                 skipped.append(b)
@@ -264,59 +326,50 @@ class CheckpointedRun:
                 raise RuntimeError(f"simulated crash at bucket {b}")
             t0 = time.perf_counter()
             # idempotence: a crash between append and lineage-record leaves
-            # the bucket unmarked; dropping its partition before (re)writing
+            # the bucket unmarked; dropping its partitions before (re)writing
             # makes the at-least-once loop exactly-once per bucket
-            self.io.delete_partition(f"violations_{self._safe_run_id}", "bucket", b)
-            self.io.delete_partition(f"verdicts_{self._safe_run_id}", "bucket", b)
+            for table in outputs:
+                self.io.delete_partition(table, "bucket", b)
             # partition pruning: reads only the _bucket=b directory
-            part = staged.where(F.col("_bucket") == b).drop("_bucket")
-            viol = plan.violations(part, list(keys), ordered=False).withColumn(
-                "bucket", F.lit(b)
+            part = staged.where(F.col("_bucket") == b)
+            viol = plan.violations(part, keys + ["_bucket"], ordered=False)
+            self.io.append(
+                viol.select(*keys, *VIOLATION_COLS, F.col("_bucket").alias("bucket")),
+                violations_t, partition_by=["bucket"],
             )
-            self.io.append(viol, f"violations_{self._safe_run_id}", partition_by=["bucket"])
-            # exchange-free: the staged table is bucketed+sorted on key_col,
-            # so this per-conversation aggregate shuffles nothing
-            verd = plan.verdicts(part, self.key_col).withColumn("bucket", F.lit(b))
-            verd.cache()
-            self.io.append(verd, f"verdicts_{self._safe_run_id}", partition_by=["bucket"])
-            if quality_checks:
-                # (key, order) uniqueness + per-key chain contiguity in the
-                # SAME bucket pass — both group on (or by a superset of) the
-                # storage-bucket key, so neither plans an Exchange either
-                from .operators import uniqueness as _uq
-
-                self.io.delete_partition(f"quality_{self._safe_run_id}", "bucket", b)
-                uniq = _uq.uniqueness_verdict(part, [self.key_col, order_col])
-                contig = _uq.contiguity(part, self.key_col, order_col, start=0).agg(
-                    F.count(F.lit(1)).alias("n_groups"),
-                    F.sum((~F.col("contiguous")).cast("long")).alias("broken_groups"),
-                )
-                qual = (
-                    uniq.crossJoin(contig)
-                    .select(
-                        F.col("total_rows"),
-                        F.col("distinct_keys"),
-                        F.col("duplicate_rows"),
-                        F.col("passed").alias("unique_passed"),
-                        F.col("n_groups"),
-                        F.col("broken_groups"),
-                        (F.col("broken_groups") == 0).alias("contiguous_passed"),
-                    )
-                    .withColumn("bucket", F.lit(b))
-                )
-                self.io.append(qual, f"quality_{self._safe_run_id}", partition_by=["bucket"])
+            # exchange-free: the staged table is bucketed+sorted on key_col
+            # and both rollup levels group by a superset of it. The bucket
+            # totals (lineage rows/violations, the quality row) are observed
+            # while the verdicts are written: no cache, no extra job
+            totals = Observation()
+            broken = F.sum((~F.col("contiguous")).cast("long"))
+            roll = plan.rollup(part, self.key_col, order_col).observe(
+                totals,
+                F.sum("rows").alias("total_rows"),
+                F.sum("violation_count").alias("violations"),
+                F.coalesce(F.sum("distinct_keys"), F.lit(0).cast("long")).alias("distinct_keys"),
+                F.sum("duplicate_rows").alias("duplicate_rows"),
+                (F.max("max_key_rows") <= 1).alias("unique_passed"),
+                F.count(F.lit(1)).alias("n_groups"),
+                broken.alias("broken_groups"),
+                (broken == 0).alias("contiguous_passed"),
+            )
+            self.io.append(
+                roll.select(
+                    "partition_key", "rows", "fail_rows", "violation_count",
+                    "passed",
+                    bucket_expr("partition_key", self.num_buckets).alias("bucket"),
+                ),
+                verdicts_t, partition_by=["bucket"],
+            )
             if fail_before_record is not None and b == fail_before_record:
-                verd.unpersist()
                 raise RuntimeError(f"simulated crash before record at bucket {b}")
-            # rows + violation counts come free from the verdict aggregate —
-            # no extra count job over the data
-            tot = verd.agg(
-                F.sum("rows").alias("r"), F.sum("violation_count").alias("v")
-            ).first()
-            n_rows, n_viol = tot["r"] or 0, tot["v"] or 0
-            verd.unpersist()
+            tot = totals.get
+            quality = tuple(tot[f.name] for f in QUALITY_SCHEMA.fields[:-1])
             log.record(
-                self.run_id, stage, b, n_rows, n_viol, time.perf_counter() - t0
+                self.run_id, stage, b, tot["total_rows"] or 0, tot["violations"] or 0,
+                time.perf_counter() - t0,
+                quality=quality if quality_checks else None,
             )
             if len(log._buffer) >= self.lineage_flush_every:
                 log.flush()

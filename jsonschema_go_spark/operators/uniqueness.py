@@ -15,8 +15,28 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def chain_invariant(
+    n_rows: Column, n_distinct: Column, nulls: Column,
+    min_val: Column, max_val: Column, start: int,
+) -> Column:
+    """A group's order values are exactly the chain ``start..start+n-1`` ⇔
+    ``n_rows == n_distinct ∧ nulls == 0 ∧ min == start ∧ max == start +
+    n_rows − 1``, where ``n_rows`` counts every row of the group (NULL order
+    values included) and ``n_distinct`` the distinct non-NULL values.
+
+    The ONE statement of the invariant: the batch :func:`contiguity`, the
+    bucket rollup (``ValidationPlan.rollup``) and both streaming forms
+    (``validate_stream``) all verdict through it, so they cannot drift."""
+    return (
+        (n_rows == n_distinct)
+        & (nulls == 0)
+        & (min_val == start)
+        & (max_val == start + n_rows - 1)
+    )
 
 
 def duplicates(df: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -56,8 +76,8 @@ def contiguity(
     """Per-group turn-chain check WITHOUT a window sort.
 
     A group's ``order_by`` values are exactly the contiguous chain
-    ``start..start+n-1`` ⇔ ``min == start ∧ max == start+n-1 ∧
-    distinct == n ∧ no nulls`` — pure aggregation, so the hot-group problem
+    ``start..start+n-1`` ⇔ :func:`chain_invariant` over its count, distinct
+    count, NULL count, min and max — pure aggregation, so the hot-group problem
     reduces to salted two-phase agg (salt = hash(order_by) % S keeps each
     distinct order value in one bucket ⇒ sum of per-bucket exact distincts is
     the exact global distinct).
@@ -82,11 +102,9 @@ def contiguity(
         F.max("_mx").alias("max_val"),
         F.sum("_nulls").alias("null_count"),
     )
-    contiguous = (
-        (F.col("null_count") == 0)
-        & (F.col("min_val") == start)
-        & (F.col("max_val") == start + F.col("n_rows") - 1)
-        & (F.col("n_distinct") == F.col("n_rows"))
+    contiguous = chain_invariant(
+        F.col("n_rows"), F.col("n_distinct"), F.col("null_count"),
+        F.col("min_val"), F.col("max_val"), start,
     )
     return out.select(
         partition_by, "n_rows", "n_distinct", "min_val", "max_val",

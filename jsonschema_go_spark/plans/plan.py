@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..compile import CompiledCheck, CompileOptions
+from ..operators.uniqueness import chain_invariant
 from ..rules import TableRule
 
 VIOLATION_COLS = ("rule_id", "column", "keyword", "observed", "expected")
@@ -170,6 +171,65 @@ class ValidationPlan:
                 F.sum("_n_viol").alias("violation_count"),
                 (F.sum("_any_fail") == 0).alias("passed"),
             )
+        )
+
+    def rollup(self, df: DataFrame, key_col: str, order_col: str) -> DataFrame:
+        """Per-key verdicts plus ``(key, order)`` uniqueness and chain
+        statistics from ONE two-level aggregate: by ``(key, order)``, then by
+        ``key``. Both levels group by a superset of ``key_col``, so over input
+        hash-partitioned on it (the staged, bucketed table of a
+        CheckpointedRun) neither level plans an Exchange.
+
+        → ``(partition_key, rows, fail_rows, violation_count, passed,
+        distinct_keys, duplicate_rows, max_key_rows, contiguous)``: the
+        :meth:`verdicts` columns; the number of distinct ``(key, order)``
+        tuples, the rows in duplicated tuples and the largest tuple count
+        (``uniqueness.uniqueness_verdict`` per key); and the
+        ``uniqueness.contiguity`` verdict (chain starting at 0) of the key's
+        order chain.
+        """
+        fail_flags = [(~ch.predicate).cast("long") for ch in self.checks]
+        n_viol = (
+            reduce(lambda a, b: a + b, fail_flags)
+            if fail_flags else F.lit(0).cast("long")
+        )
+        per_pair = (
+            df.select(
+                F.col(key_col).alias("partition_key"),
+                F.col(order_col).alias("_order"),
+                n_viol.alias("_n_viol"),
+            )
+            .groupBy("partition_key", "_order")
+            .agg(
+                F.count(F.lit(1)).alias("_n"),
+                F.sum((F.col("_n_viol") > 0).cast("long")).alias("_fail"),
+                F.sum("_n_viol").alias("_viol"),
+            )
+        )
+        n = F.col("_n")
+        per_key = per_pair.groupBy("partition_key").agg(
+            F.sum(n).alias("rows"),
+            F.sum("_fail").alias("fail_rows"),
+            F.sum("_viol").alias("violation_count"),
+            (F.sum("_fail") == 0).alias("passed"),
+            F.count(F.lit(1)).alias("distinct_keys"),
+            F.sum(F.when(n > 1, n).otherwise(0)).alias("duplicate_rows"),
+            F.max(n).alias("max_key_rows"),
+            # each level-1 group is one order value: counting the non-NULL
+            # ones counts the key's distinct order values
+            F.count("_order").alias("_d"),
+            F.sum(F.when(F.col("_order").isNull(), n).otherwise(0)).alias("_nulls"),
+            F.min("_order").alias("_mn"),
+            F.max("_order").alias("_mx"),
+        )
+        contiguous = chain_invariant(
+            F.col("rows"), F.col("_d"), F.col("_nulls"),
+            F.col("_mn"), F.col("_mx"), 0,
+        )
+        return per_key.select(
+            "partition_key", "rows", "fail_rows", "violation_count", "passed",
+            "distinct_keys", "duplicate_rows", "max_key_rows",
+            contiguous.alias("contiguous"),
         )
 
     def repair(self, df: DataFrame) -> DataFrame:

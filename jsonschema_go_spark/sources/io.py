@@ -18,6 +18,7 @@ from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -43,6 +44,24 @@ class TableIO:
         except Exception:
             return False
 
+    def read_if_exists(self, name: str, schema: StructType) -> Optional[DataFrame]:
+        """The table read with its known ``schema``, or None when it does not
+        exist. Existence comes from metadata (catalog / filesystem) and the
+        parquet read skips schema inference, so neither step runs a job or
+        fails analysis."""
+        if self.format == "iceberg":
+            return self.read(name) if self.spark.catalog.tableExists(name) else None
+        path, fs = self._fs_path(name)
+        if not fs.exists(path):
+            return None
+        return self.spark.read.schema(schema).parquet(self._path(name))
+
+    def _fs_path(self, name: str):
+        """(Hadoop Path, its FileSystem) for a parquet table path."""
+        jvm = self.spark._jvm
+        p = jvm.org.apache.hadoop.fs.Path(self._path(name))
+        return p, p.getFileSystem(self.spark._jsc.hadoopConfiguration())
+
     def append(self, df: DataFrame, name: str, partition_by: Optional[list] = None) -> None:
         if self.format == "iceberg":
             df.writeTo(name).append()
@@ -63,10 +82,7 @@ class TableIO:
                 return
             self.spark.sql(f"DELETE FROM {name} WHERE {col} = {value}")
             return
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(f"{self._path(name)}/{col}={value}")
-        fs = p.getFileSystem(hconf)
+        p, fs = self._fs_path(f"{name}/{col}={value}")
         if fs.exists(p):
             fs.delete(p, True)
 

@@ -26,13 +26,15 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.uniqueness import chain_invariant
 from ..plans.plan import ValidationPlan, VIOLATION_COLS
 
 
 # (the round-6 moment-check helper `_sumsq` is gone: count/min/max/sum/sumsq
 # moments do NOT determine contiguity — from n=8 up e.g. [0,0,3,4,4,5,5,7]
 # matches all five moments of 0..7. Both streaming contiguity forms now keep
-# the EXACT distinct turn set, the batch operator's invariant.)
+# the EXACT distinct turn set plus row counts and verdict with the batch
+# operator's own invariant, uniqueness.chain_invariant.)
 
 
 def violation_stream(
@@ -180,23 +182,23 @@ def stateful_contiguity_stream(
     """Custom stateful operator via ``applyInPandasWithState`` (the mandate's
     named surface for operators Spark lacks): incremental per-conversation
     turn-chain tracking across micro-batches →
-    ``(conv, rows, min_idx, max_idx, contiguous)``.
+    ``(conv, rows, n_rows, min_idx, max_idx, contiguous)``.
 
-    r7 SOUNDNESS FIX (the round-6 judge's #1): the previous verdict checked
-    count/min/max/sum/sum-of-squares MOMENTS, and moments do not determine
-    contiguity — ``[0,0,3,4,4,5,5,7]`` matches all five moments of ``0..7``
-    and was reported ``contiguous=true`` for a corrupted chain. State now
-    keeps the EXACT DISTINCT turn-index set per conversation, so the
-    verdict is the batch operator's own invariant (``uniqueness.contiguity``:
-    distinct == rows ∧ min == start ∧ max == start+rows-1, with ``rows``
-    the distinct count). State is O(distinct turns per conversation) —
-    conversations are bounded, so state stays bounded by conversation
-    length × active conversations (the same argument the verdict stream
-    already relied on; an upstream ``dropDuplicatesWithinWatermark`` cannot
-    substitute here because chaining it before another stateful operator is
-    unsupported in update mode, and its lateness horizon would re-open the
-    duplicate blind spot the judge demonstrated). Emits one updated row per
-    conversation per micro-batch touching it → update-mode sink.
+    State per conversation is the EXACT distinct turn-index set plus a
+    counter of every row seen (NULL indices included): ``rows`` is the
+    distinct count, ``n_rows`` the row count. Moments would not do —
+    ``[0,0,3,4,4,5,5,7]`` matches all five moments of ``0..7`` — and the
+    distinct set alone is duplicate-blind (``[0,1,1,2]`` has the set of
+    ``0..2``); the counter is what lets the verdict see duplicates and NULLs.
+    The verdict is :func:`~jsonschema_go_spark.operators.uniqueness.chain_invariant`,
+    projected on the JVM over the emitted stats, so it is the batch
+    ``uniqueness.contiguity`` verdict by construction. State is O(distinct
+    turns per conversation) — conversations are bounded, so state stays
+    bounded by conversation length × active conversations (an upstream
+    ``dropDuplicatesWithinWatermark`` cannot substitute: chaining it before
+    another stateful operator is unsupported in update mode). Emits one
+    updated row per conversation per micro-batch touching it → update-mode
+    sink.
 
     Arrow-batched pandas; no per-row Python.
     """
@@ -206,43 +208,40 @@ def stateful_contiguity_stream(
     # key field type comes from the INPUT schema — a non-string conversation
     # key (e.g. long ids) must round-trip through Arrow unchanged
     key_type = stream.schema[conv_col].dataType.simpleString()
-    out_schema = (
-        f"{conv_col} {key_type}, rows long, min_idx int, max_idx int, "
-        "contiguous boolean"
+    stats_schema = (
+        f"{conv_col} {key_type}, rows long, n_rows long, nulls long, "
+        "min_idx int, max_idx int"
     )
-    state_schema = "idxs array<int>"
+    state_schema = "idxs array<int>, n_rows long, n_valid long"
 
     def update(key, pdfs, state: "GroupState"):
         import pandas as pd
 
-        (seen,) = state.get if state.exists else ([],)
+        seen, n_rows, n_valid = state.get if state.exists else ([], 0, 0)
         seen = set(seen if seen is not None else [])
         for pdf in pdfs:
             idx = pdf[idx_col].dropna()
-            if len(idx):
-                seen.update(int(v) for v in idx.unique())
-        state.update((sorted(seen),))
-        rows = len(seen)
-        mn = min(seen) if seen else None
-        mx = max(seen) if seen else None
-        contiguous = (
-            rows > 0 and mn == start and mx == start + rows - 1
-        )  # distinct==rows holds by construction: `seen` IS the distinct set
+            n_rows += len(pdf)
+            n_valid += len(idx)
+            seen.update(int(v) for v in idx.unique())
+        state.update((sorted(seen), n_rows, n_valid))
         yield pd.DataFrame(
             [
                 {
                     conv_col: key[0],
-                    "rows": rows,
-                    "min_idx": mn,
-                    "max_idx": mx,
-                    "contiguous": bool(contiguous),
+                    "rows": len(seen),
+                    "n_rows": n_rows,
+                    "nulls": n_rows - n_valid,
+                    "min_idx": min(seen) if seen else None,
+                    "max_idx": max(seen) if seen else None,
                 }
             ]
         )
 
-    return stream.groupBy(conv_col).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    stats = stream.groupBy(conv_col).applyInPandasWithState(
+        update, stats_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
+    return _chain_verdict(stats, conv_col, start)
 
 
 def contiguity_verdict_stream(
@@ -252,8 +251,9 @@ def contiguity_verdict_stream(
     start: int = 0,
 ) -> DataFrame:
     """JVM-side rendition of :func:`stateful_contiguity_stream` — the SAME
-    per-conversation summary ``(rows, min_idx, max_idx, contiguous)`` as a
-    plain update-mode groupBy aggregation, no ``applyInPandasWithState``.
+    per-conversation summary ``(rows, n_rows, min_idx, max_idx,
+    contiguous)`` as a plain update-mode groupBy aggregation, no
+    ``applyInPandasWithState``.
 
     Why it exists (round 6): the pandas-state path measured **12.5× slower
     than the batch contiguity pass** at 600k turns / local[32]
@@ -261,34 +261,38 @@ def contiguity_verdict_stream(
     is the engine's one non-JVM surface and would bottleneck a 100 TB
     streaming backfill.
 
-    r7 SOUNDNESS FIX (the round-6 judge's #1): the round-6 verdict used
-    count/min/max/sum/sum-of-squares moments, which are fooled from n=8 up
-    (``[0,0,3,4,4,5,5,7]`` ≡ moments of ``0..7``). The aggregation state is
-    now ``collect_set(idx)`` — the exact distinct turn set, still a single
-    associative streaming aggregate (one stateful operator, update-mode
-    legal) — and the verdict is the batch invariant on the DISTINCT count:
-    ``rows = |set|``, ``min == start``, ``max == start + rows − 1``
-    (distinct == rows holds by construction). This also retires the
-    round-6 ADVICE note on double-rounding in the closed-form Σk² — the
-    moment formula no longer exists. State is O(distinct turns per
+    The aggregation state is ``collect_set(idx)`` — the exact distinct turn
+    set — next to ``count(*)`` and ``count(idx)``, all associative streaming
+    aggregates in one stateful operator (update-mode legal). The counts make
+    the verdict duplicate- and NULL-aware: it is the batch
+    :func:`~jsonschema_go_spark.operators.uniqueness.chain_invariant`, not a
+    check on the distinct set alone. State is O(distinct turns per
     conversation), same bound as the pandas-state form.
     """
     idx = F.col(idx_col)
-    agged = stream.groupBy(conv_col).agg(
-        F.collect_set(idx).alias("_idxs")
-    )
-    rows = F.size(F.col("_idxs")).cast("long")
-    mn = F.array_min(F.col("_idxs"))
-    mx = F.array_max(F.col("_idxs"))
-    return agged.select(
+    stats = stream.groupBy(conv_col).agg(
+        F.collect_set(idx).alias("_idxs"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(idx).alias("_n_valid"),
+    ).select(
         F.col(conv_col),
-        rows.alias("rows"),
-        mn.alias("min_idx"),
-        mx.alias("max_idx"),
-        (
-            (rows > 0)
-            & (mn == F.lit(start))
-            & (mx.cast("long") == F.lit(start) + rows - 1)
+        F.size("_idxs").cast("long").alias("rows"),
+        F.col("n_rows"),
+        (F.col("n_rows") - F.col("_n_valid")).alias("nulls"),
+        F.array_min("_idxs").alias("min_idx"),
+        F.array_max("_idxs").alias("max_idx"),
+    )
+    return _chain_verdict(stats, conv_col, start)
+
+
+def _chain_verdict(stats: DataFrame, conv_col: str, start: int) -> DataFrame:
+    """Both stream forms' output: their per-conversation stats with the
+    batch chain invariant as ``contiguous``."""
+    return stats.select(
+        conv_col, "rows", "n_rows", "min_idx", "max_idx",
+        chain_invariant(
+            F.col("n_rows"), F.col("rows"), F.col("nulls"),
+            F.col("min_idx"), F.col("max_idx"), start,
         ).alias("contiguous"),
     )
 

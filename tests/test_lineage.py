@@ -179,13 +179,12 @@ def test_quality_checks_in_bucket_pass(env):
     assert agg["groups"] == per.count()
     assert agg["broken"] == per.where(~F.col("contiguous")).count()
 
-    # exchange-free on the DATA-sized stage: the per-key aggregate groups by
-    # a superset of the storage-bucket key, so it needs no shuffle (the final
-    # single-row rollup exchanges only the tiny per-key aggregates)
+    # exchange-free: both levels of the bucket rollup group by a superset
+    # of the storage-bucket key, so the whole rollup needs no shuffle
     staged = spark.table(run._staged_table)
-    part = staged.where(F.col("_bucket") == 0).drop("_bucket")
-    per_key = part.groupBy("conv_id", "turn_idx").count()
-    plan_str = per_key._jdf.queryExecution().executedPlan().toString()
+    part = staged.where(F.col("_bucket") == 0)
+    roll = plan.rollup(part, "conv_id", "turn_idx")
+    plan_str = roll._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan_str, plan_str
 
 
@@ -218,3 +217,156 @@ def test_lineage_appends_are_batched(env):
     assert appends.count("lineage") == 1
     lin = io.read("lineage").where(F.col("run_id") == "r8")
     assert lin.count() == 4  # all four records in the one batch
+
+
+# ------------------------------------------- fused bucket pass vs seed forms
+
+
+def _edge_transcripts(spark):
+    """Dirty transcripts plus the rows the rollup must agree on: a fully
+    duplicated conversation, one duplicated turn, a NULL turn_idx and a NULL
+    conv_id."""
+    base = generate_transcripts(spark, num_convs=60, seed=7, violation_rate=0.2)
+    conv, turn = F.col("conv_id"), F.col("turn_idx")
+    c = [r[0] for r in base.select(conv).where(conv.isNotNull()).distinct()
+         .orderBy(conv).limit(3).collect()]
+    return (
+        base.unionByName(base.where(conv == c[0]))
+        .unionByName(base.where((conv == c[1]) & (turn == 0)))
+        .unionByName(base.where((conv == c[2]) & (turn == 1))
+                     .withColumn("turn_idx", F.lit(None).cast("int")))
+        .unionByName(base.where((conv == c[2]) & (turn == 0))
+                     .withColumn("conv_id", F.lit(None).cast(base.schema["conv_id"].dataType)))
+    )
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_matches_seed(spark, io, run, plan):
+    """Every output table of a quality_checks run equals the seed per-bucket
+    pass over the same staged table, field by field and schema included;
+    lineage rows/violations too (only wall_sec/finished_at may differ)."""
+    from jsonschema_go_spark.lineage import LINEAGE_SCHEMA
+    from tests.reference_forms import seed_bucket_pass
+
+    staged = spark.table(run._staged_table)
+    want = {"violations": [], "verdicts": [], "quality": []}
+    want_lineage = []
+    for b in range(run.num_buckets):
+        viol, verd, qual, (n_rows, n_viol) = seed_bucket_pass(plan, staged, b)
+        for name, ref in zip(want, (viol, verd, qual)):
+            want[name].append(ref)
+        want_lineage.append((b, "done", n_rows, n_viol))
+    for name, refs in want.items():
+        ref = refs[0]
+        for r in refs[1:]:
+            ref = ref.unionByName(r)
+        if ref.isEmpty():  # an all-empty append leaves no data files
+            got = io.read_if_exists(f"{name}_{run.run_id}", ref.schema)
+            assert got is None or got.isEmpty(), name
+            continue
+        got = io.read(f"{name}_{run.run_id}")
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            (f.name, f.dataType) for f in ref.schema
+        ], name
+        assert _sorted_rows(got) == _sorted_rows(ref), name
+    lin = io.read("lineage").where(F.col("run_id") == run.run_id)
+    assert [(f.name, f.dataType) for f in lin.schema] == [
+        (f.name, f.dataType) for f in LINEAGE_SCHEMA
+    ]
+    got_lineage = sorted(
+        tuple(r) for r in lin.select("bucket", "status", "rows", "violations").collect()
+    )
+    assert got_lineage == want_lineage
+
+
+def test_fused_pass_matches_seed_forms(spark, tmp_path):
+    """Duplicated turns, NULL turn_idx and NULL conv_id: verdicts, quality
+    and lineage equal the seed's separate aggregates."""
+    df = _edge_transcripts(spark)
+    plan = compile_table(transcript_table_rule(), df.schema)
+    io = TableIO(spark, base_path=str(tmp_path))
+    run = CheckpointedRun(io, "f1", num_buckets=4)
+    run.run(df, plan, quality_checks=True)
+    _assert_matches_seed(spark, io, run, plan)
+    # the fixture exercises what it claims: duplicates and broken chains
+    qual = io.read("quality_f1").agg(F.sum("duplicate_rows"), F.sum("broken_groups")).first()
+    assert qual[0] > 0 and qual[1] > 0
+
+
+def test_fused_pass_empty_buckets_match_seed(spark, tmp_path):
+    """More buckets than conversations: an empty bucket's quality row keeps
+    the seed's NULL/0 pattern and its lineage row counts 0 rows."""
+    base = generate_transcripts(spark, num_convs=3, seed=7, skew=False)
+    plan = compile_table(transcript_table_rule(), base.schema)
+    io = TableIO(spark, base_path=str(tmp_path))
+    run = CheckpointedRun(io, "f2", num_buckets=8)
+    run.run(base, plan, quality_checks=True)
+    _assert_matches_seed(spark, io, run, plan)
+    filled = {r[0] for r in spark.table(run._staged_table).select("_bucket").distinct().collect()}
+    empty = sorted(set(range(8)) - filled)
+    assert empty
+    got = {r["bucket"]: tuple(r) for r in io.read("quality_f2").collect()}
+    for b in empty:
+        assert got[b] == (None, 0, None, None, 0, None, None, b)
+
+
+@pytest.mark.parametrize("crash", [{"fail_on_bucket": 2}, {"fail_before_record": 1}])
+def test_fused_pass_crash_resume_matches_seed(spark, tmp_path, crash):
+    """Crash then resume (before a bucket, and after its appends but before
+    its lineage record) leaves exactly the seed outputs: no duplicated or
+    missing verdict, quality or lineage rows."""
+    df = _edge_transcripts(spark)
+    plan = compile_table(transcript_table_rule(), df.schema)
+    io = TableIO(spark, base_path=str(tmp_path))
+    run = CheckpointedRun(io, "f3", num_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run.run(df, plan, quality_checks=True, **crash)
+    run.run(df, plan, resume=True, quality_checks=True)
+    _assert_matches_seed(spark, io, run, plan)
+
+
+def test_bucket_pass_job_budget(env):
+    """Regression pin: one bucket with quality_checks costs at most 5 Spark
+    jobs including the flush, exactly one of them the lineage append, and
+    the lineage/quality rows are JVM local relations (LocalTableScan), so
+    the flush starts no Python-worker tasks. completed_buckets is one job."""
+    spark, df, plan, io = env
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    run = CheckpointedRun(io, "jobs", num_buckets=1)
+    run._stage_input(df, resume=False)
+    appended, orig = {}, io.append
+
+    def tagged_append(d, name, partition_by=None):
+        appended[name] = d
+        sc.setJobGroup(f"jobs:{name}", name)
+        try:
+            orig(d, name, partition_by)
+        finally:
+            sc.setJobGroup("jobs", "bucket pass")
+
+    io.append = tagged_append
+    sc.setJobGroup("jobs", "bucket pass")
+    try:
+        run.run(df, plan, resume=True, quality_checks=True)
+    finally:
+        io.append = orig
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    groups = ["jobs"] + [f"jobs:{name}" for name in appended]
+    jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
+    assert sum(jobs.values()) <= 5, jobs
+    assert jobs["jobs:lineage"] == 1, jobs
+    for name in ("lineage", "quality_jobs"):
+        flushed = appended[name]._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in flushed and "ExistingRDD" not in flushed, flushed
+
+    sc.setJobGroup("jobs:completed", "completed_buckets")
+    try:
+        assert LineageLog(io).completed_buckets("jobs", "validate") == [0]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("jobs:completed")) == 1
+    missing = TableIO(spark, base_path=str(io.base_path) + "/none")
+    assert LineageLog(missing).completed_buckets("jobs", "validate") == []

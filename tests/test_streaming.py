@@ -217,13 +217,19 @@ def test_contiguity_verdict_stream_jvm_equals_pandas_state(stream_env):
         [0, 2, 2, 2, 4],           # linear-moment collision
         [0, 1, 2, 3, 4, 5, 6, 7],  # genuinely contiguous control
         [1, 2, 3],                 # wrong start
+        [0, 1, 1, 2],              # distinct set is 0..2: blind to the duplicate
+        [0, 0, 1],                 # duplicated start
+        [0, 1, None],              # NULL turn index
+        [None, None],              # no turn index at all
     ],
 )
 def test_streaming_contiguity_sound_on_moment_collisions(spark, tmp_path, idxs):
     """The round-6 judge's live repro: turn chains whose moments match a
     contiguous series must be flagged contiguous=false by BOTH streaming
     forms, exactly as the batch operator says (the round-6 moment check
-    returned true for the first two)."""
+    returned true for the first two); likewise duplicate turns, which the
+    distinct set alone cannot see, and NULL turn indices. Field by field:
+    rows (distinct), n_rows, min, max and the verdict all equal batch."""
     from jsonschema_go_spark.operators import uniqueness as uq
     from jsonschema_go_spark.streaming.validate_stream import (
         contiguity_verdict_stream,
@@ -236,31 +242,18 @@ def test_streaming_contiguity_sound_on_moment_collisions(spark, tmp_path, idxs):
         "overwrite"
     ).parquet(data_path)
     batch = spark.read.parquet(data_path)
-    want = {
-        r["conv_id"]: r["contiguous"]
-        for r in uq.contiguity(batch, "conv_id", "turn_idx", start=0).collect()
-    }
+    w = uq.contiguity(batch, "conv_id", "turn_idx", start=0).first()
+    want = (w["n_distinct"], w["n_rows"], w["min_val"], w["max_val"], w["contiguous"])
     stream = spark.readStream.schema(batch.schema).parquet(data_path)
     for name, op in (
         ("adv_jvm", contiguity_verdict_stream),
         ("adv_pd", stateful_contiguity_stream),
     ):
-        q = (
-            op(stream, "conv_id", "turn_idx", start=0)
-            .writeStream.format("memory")
-            .queryName(f"{name}_{abs(hash(tuple(idxs)))}")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            r["conv_id"]: r["contiguous"]
-            for r in spark.sql(
-                f"SELECT * FROM {name}_{abs(hash(tuple(idxs)))}"
-            ).collect()
-        }
+        view = f"{name}_{abs(hash(tuple(idxs)))}"
+        _run(op(stream, "conv_id", "turn_idx", start=0), "update", tmp_path, view)
+        # the final state is the emission that has seen the most rows
+        g = max(spark.sql(f"SELECT * FROM {view}").collect(), key=lambda r: r["n_rows"])
+        got = (g["rows"], g["n_rows"], g["min_idx"], g["max_idx"], g["contiguous"])
         assert got == want, (name, idxs, got, want)
 
 
