@@ -137,11 +137,15 @@ def cmd_perconv(args) -> None:
     t_raw = timed(raw_job)
 
     io = TableIO(spark, base_path=args.staging)
-    run = CheckpointedRun(io, "perconv", num_buckets=args.buckets,
-                          sub_buckets=args.sub_buckets)
+    run = CheckpointedRun(io, "perconv", num_buckets=args.buckets)
     t0 = time.perf_counter()
     staged = run._stage_input(df, resume=False)
     t_stage = time.perf_counter() - t0
+    # the storage-bucket count staging derived from the input's bytes
+    sub_buckets = int(
+        spark.sql(f"DESCRIBE TABLE EXTENDED {run._staged_table}")
+        .where("col_name = 'Num Buckets'").first()["data_type"]
+    )
 
     def staged_single_job():
         # ONE exchange-free aggregate over the whole bucketed table: the scan
@@ -177,7 +181,7 @@ def cmd_perconv(args) -> None:
                 "speedup_single_job": round(t_raw / t_single, 2),
                 "staging_write_sec": round(t_stage, 3),
                 "buckets": args.buckets,
-                "sub_buckets": args.sub_buckets,
+                "sub_buckets": sub_buckets,
                 "bucketed_plan_has_exchange": "Exchange" in plan_str,
             }
         )
@@ -200,7 +204,6 @@ def main() -> int:
     c.add_argument("--input", default="/tmp/scale_input")
     c.add_argument("--staging", default="/tmp/perconv_staging")
     c.add_argument("--buckets", type=int, default=16)
-    c.add_argument("--sub-buckets", dest="sub_buckets", type=int, default=8)
     c.add_argument("--repeats", type=int, default=2)
     args = p.parse_args()
     if args.cmd == "generate":

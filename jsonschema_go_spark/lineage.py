@@ -18,6 +18,19 @@ lineage rows are buffered and appended together in the batched
 :meth:`LineageLog.flush` — quality first, so a "done" lineage row implies
 its quality row exists — as JVM local relations, so the flush runs no
 Python-worker tasks.
+
+Within each bucket the staged table is split into ``n`` Spark storage
+buckets on the key, sized from the input's bytes the way Spark sizes file
+splits (:func:`sub_bucket_count`): ``n = ceil(bytes_per_bucket / split)``
+with ``split = min(maxPartitionBytes, max(openCostInBytes,
+bytes_per_bucket / defaultParallelism))``, where ``bytes_per_bucket`` is the
+optimizer's size estimate of the input over ``num_buckets``; an input
+without size statistics gets 8. Each bucket job then runs ``n`` tasks and
+writes at most ``n`` files to each of the violations and verdicts tables —
+1 for a bucket up to ``openCostInBytes`` (4 MB by default), one per
+``maxPartitionBytes`` (128 MB) for a large one. The Columns a run needs are
+built once per run (the plan's once per plan); a bucket pays only for its
+filter, its DataFrame operations and a new ``Observation``.
 """
 
 from __future__ import annotations
@@ -60,9 +73,46 @@ QUALITY_SCHEMA = T.StructType([
 ])
 
 
+#: staged sub-buckets of an input whose size the optimizer does not know
+UNSIZED_SUB_BUCKETS = 8
+#: file in the staged table's directory that records its sub-bucket count
+#: (a leading ``_`` hides it from Spark's file listing)
+SUB_BUCKETS_FILE = "_sub_buckets"
+
+
 def bucket_expr(key_col: str, num_buckets: int) -> F.Column:
     """Explicit conv_id hash-bucketing (SURVEY.md §2.3)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
+
+
+def _input_bytes(df: DataFrame) -> Optional[int]:
+    """The optimizer's size estimate of ``df`` (``stats.sizeInBytes`` of
+    its optimized plan: file bytes for a file scan), or None when a leaf of
+    the plan has no statistics and reports ``spark.sql.defaultSizeInBytes``
+    — an estimate derived from that placeholder means nothing."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        if int(str(leaves.apply(i).stats().sizeInBytes())) >= unknown:
+            return None
+    return int(str(plan.stats().sizeInBytes()))
+
+
+def sub_bucket_count(
+    size: Optional[int], num_buckets: int, max_split: int, open_cost: int, parallelism: int
+) -> int:
+    """Spark storage buckets per staged bucket for an input of ``size``
+    bytes (None: unknown → :data:`UNSIZED_SUB_BUCKETS`), sized like Spark's
+    file splits (``FilePartition.maxSplitBytes``): a split is
+    ``bytes_per_bucket / parallelism``, at least ``open_cost`` and at most
+    ``max_split``, and a bucket gets one storage bucket per split. Ceiling
+    divisions, so a mid-sized bucket gets exactly ``parallelism``."""
+    if size is None:
+        return UNSIZED_SUB_BUCKETS
+    per_bucket = -(-size // num_buckets)
+    split = max(1, min(max_split, max(open_cost, -(-per_bucket // parallelism))))
+    return max(1, -(-per_bucket // split))
 
 
 def _local_frame(spark: SparkSession, schema: T.StructType, rows: Sequence[tuple]) -> DataFrame:
@@ -159,9 +209,11 @@ class CheckpointedRun:
     buckets already marked done for this run_id.
 
     Each bucket is one pass: 2 scans of its staged partition and 2 data
-    writes (violations, verdicts), 2 Spark jobs, with the rollup totals
-    observed during the verdict write and the ``quality_checks`` row batched
-    with the lineage rows (module docstring). ``order_col`` must name a
+    writes (violations, verdicts), 2 Spark jobs of ``n`` tasks each (``n``
+    staged sub-buckets, sized from the input's bytes; at most ``n`` files
+    per bucket and output table), with the rollup totals observed during
+    the verdict write and the ``quality_checks`` row batched with the
+    lineage rows (module docstring). ``order_col`` must name a
     column of the input: the rollup always carries its chain statistics.
     The ``bucket`` column is never a literal — the violations take the
     staged ``_bucket`` partition column, the verdicts recompute
@@ -177,9 +229,6 @@ class CheckpointedRun:
     run_id: str
     key_col: str = "conv_id"
     num_buckets: int = 16
-    #: Spark storage buckets on key_col WITHIN each _bucket partition —
-    #: makes every per-key aggregate over the staged data exchange-free
-    sub_buckets: int = 8
     #: lineage records per batched append (bounds both small-file count and
     #: the re-work window: ≤ flush_every-1 completed-but-unflushed buckets
     #: re-process idempotently after a hard crash)
@@ -223,13 +272,24 @@ class CheckpointedRun:
         partition-pruned read: total I/O = 1 write + num_buckets pruned
         reads.
 
-        The staged data is ALSO a Spark bucketed table: ``bucketBy(sub_buckets,
+        The staged data is ALSO a Spark bucketed table: ``bucketBy(n,
         key_col) + sortBy(key_col)`` within each ``_bucket`` partition. The
         bucketed scan reports ``HashPartitioning(key_col)``, so the
         per-conversation verdict aggregate needs NO Exchange — this was the
         16M-group full-data shuffle flagged at 97M turns (BENCH.md per-stage
         table). On a real lake the source table is already stored
         bucketed/partitioned this way and staging is a no-op.
+
+        ``n`` is :func:`sub_bucket_count` of the input's size estimate and
+        the session's split confs. Per bucket: 1 up to ``openCostInBytes``,
+        one per ``openCostInBytes`` up to ``defaultParallelism``, then
+        ``defaultParallelism`` up to that many ``maxPartitionBytes``, then
+        one per ``maxPartitionBytes``; 8 for an input without size
+        statistics. The staged files are at most ``num_buckets × n``. ``n`` is
+        recorded in :data:`SUB_BUCKETS_FILE` after the write, so a resume
+        in a fresh session registers the files with the count they were
+        written with, whatever the confs are then; staged files without
+        that record (a crash mid-staging) are staged again.
         """
         spark = self.io.spark
         table = self._staged_table
@@ -239,31 +299,49 @@ class CheckpointedRun:
         path = self.io._path(table)
         if resume and spark.catalog.tableExists(table):
             return spark.table(table)
-        if resume and self.io.exists(table):
+        record, fs = self.io._fs_path(f"{table}/{SUB_BUCKETS_FILE}")
+        if resume and fs.exists(record):
             # files survive a crash but the session catalog does not (fresh
             # driver) — re-register the external bucketed table over them
-            self._register_staged(table, path)
+            stream = fs.open(record)
+            try:
+                n = stream.readInt()
+            finally:
+                stream.close()
+            self._register_staged(table, path, n)
             return spark.table(table)
+        conf = spark._jsparkSession.sessionState().conf()
+        n = sub_bucket_count(
+            _input_bytes(df), self.num_buckets, conf.filesMaxPartitionBytes(),
+            conf.filesOpenCostInBytes(), spark.sparkContext.defaultParallelism,
+        )
         bucketed = df.withColumn(
             "_bucket", bucket_expr(self.key_col, self.num_buckets)
         )
         # repartition on the partition column so each output dir is written
-        # by few tasks: files = num_buckets dirs × sub_buckets bucket files
+        # by few tasks: files = num_buckets dirs × n bucket files
         (
             bucketed.repartition("_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
-            .bucketBy(self.sub_buckets, self.key_col)
+            .bucketBy(n, self.key_col)
             .sortBy(self.key_col)
             .option("path", path)
             .format("parquet")
             .saveAsTable(table)
         )
+        stream = fs.create(record, True)
+        try:
+            stream.writeInt(n)
+        finally:
+            stream.close()
         return spark.table(table)
 
-    def _register_staged(self, table: str, path: str) -> None:
+    def _register_staged(self, table: str, path: str, n: int) -> None:
         """CREATE TABLE over existing staged files (crash-resume in a new
-        session) — schema from the files, bucket spec from self."""
+        session) — schema from the files, ``n`` storage buckets as
+        recorded when they were written: a bucketed scan registered with
+        fewer buckets than written would silently drop the extra files."""
         spark = self.io.spark
         df = spark.read.parquet(path)
         cols = ", ".join(
@@ -275,7 +353,7 @@ class CheckpointedRun:
             f"CREATE TABLE {table} ({cols}, _bucket INT) USING parquet "
             f"PARTITIONED BY (_bucket) "
             f"CLUSTERED BY ({self.key_col}) SORTED BY ({self.key_col}) "
-            f"INTO {self.sub_buckets} BUCKETS "
+            f"INTO {n} BUCKETS "
             f"LOCATION '{path}'"
         )
         spark.sql(f"MSCK REPAIR TABLE {table}")
@@ -318,6 +396,27 @@ class CheckpointedRun:
         violations_t = f"violations_{self._safe_run_id}"
         verdicts_t = f"verdicts_{self._safe_run_id}"
         outputs = [violations_t, verdicts_t] + ([log.quality_table] if quality_checks else [])
+        # every Column of the loop, built once per run: per bucket only the
+        # filter, the DataFrame operations and the Observation are new
+        bucket = F.col("_bucket")
+        viol_keys = keys + ["_bucket"]
+        viol_out = [F.col(k) for k in keys] + [F.col(c) for c in VIOLATION_COLS]
+        viol_out.append(bucket.alias("bucket"))
+        verd_out = [
+            F.col(c) for c in ("partition_key", "rows", "fail_rows", "violation_count", "passed")
+        ]
+        verd_out.append(bucket_expr("partition_key", self.num_buckets).alias("bucket"))
+        broken = F.sum((~F.col("contiguous")).cast("long"))
+        observed = [
+            F.sum("rows").alias("total_rows"),
+            F.sum("violation_count").alias("violations"),
+            F.coalesce(F.sum("distinct_keys"), F.lit(0).cast("long")).alias("distinct_keys"),
+            F.sum("duplicate_rows").alias("duplicate_rows"),
+            (F.max("max_key_rows") <= 1).alias("unique_passed"),
+            F.count(F.lit(1)).alias("n_groups"),
+            broken.alias("broken_groups"),
+            (broken == 0).alias("contiguous_passed"),
+        ]
         for b in range(self.num_buckets):
             if b in done:
                 skipped.append(b)
@@ -331,37 +430,16 @@ class CheckpointedRun:
             for table in outputs:
                 self.io.delete_partition(table, "bucket", b)
             # partition pruning: reads only the _bucket=b directory
-            part = staged.where(F.col("_bucket") == b)
-            viol = plan.violations(part, keys + ["_bucket"], ordered=False)
-            self.io.append(
-                viol.select(*keys, *VIOLATION_COLS, F.col("_bucket").alias("bucket")),
-                violations_t, partition_by=["bucket"],
-            )
+            part = staged.where(bucket == b)
+            viol = plan.violations(part, viol_keys, ordered=False)
+            self.io.append(viol.select(*viol_out), violations_t, partition_by=["bucket"])
             # exchange-free: the staged table is bucketed+sorted on key_col
             # and both rollup levels group by a superset of it. The bucket
             # totals (lineage rows/violations, the quality row) are observed
             # while the verdicts are written: no cache, no extra job
             totals = Observation()
-            broken = F.sum((~F.col("contiguous")).cast("long"))
-            roll = plan.rollup(part, self.key_col, order_col).observe(
-                totals,
-                F.sum("rows").alias("total_rows"),
-                F.sum("violation_count").alias("violations"),
-                F.coalesce(F.sum("distinct_keys"), F.lit(0).cast("long")).alias("distinct_keys"),
-                F.sum("duplicate_rows").alias("duplicate_rows"),
-                (F.max("max_key_rows") <= 1).alias("unique_passed"),
-                F.count(F.lit(1)).alias("n_groups"),
-                broken.alias("broken_groups"),
-                (broken == 0).alias("contiguous_passed"),
-            )
-            self.io.append(
-                roll.select(
-                    "partition_key", "rows", "fail_rows", "violation_count",
-                    "passed",
-                    bucket_expr("partition_key", self.num_buckets).alias("bucket"),
-                ),
-                verdicts_t, partition_by=["bucket"],
-            )
+            roll = plan.rollup(part, self.key_col, order_col).observe(totals, *observed)
+            self.io.append(roll.select(*verd_out), verdicts_t, partition_by=["bucket"])
             if fail_before_record is not None and b == fail_before_record:
                 raise RuntimeError(f"simulated crash before record at bucket {b}")
             tot = totals.get

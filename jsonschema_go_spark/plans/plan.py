@@ -14,13 +14,17 @@ Outputs (SURVEY.md §2.3):
 - per-partition pass/fail verdicts via partial+final hash-agg (the
   ``SchemaOrBool`` boolean-verdict form, ``/root/reference/entities.go:620``);
 - per-rule summary counts.
+
+The predicate-derived Columns behind these outputs are built once per plan
+(:class:`_CheckColumns`) and reused by every call, so a per-bucket loop pays
+only for its DataFrame operations.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
-from typing import List, Optional, Sequence, Union
+from functools import cached_property, reduce
+from typing import List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -33,50 +37,43 @@ from ..rules import TableRule
 VIOLATION_COLS = ("rule_id", "column", "keyword", "observed", "expected")
 
 
-@dataclass
-class ValidationPlan:
-    table_rule: TableRule
-    checks: List[CompiledCheck]
-    options: CompileOptions = field(default_factory=CompileOptions)
+class _CheckColumns:
+    """The Columns a plan derives from one list of checks, each group built
+    on its first use and reused by every later call. Building a Column costs
+    a JVM round trip per function, literal and alias — about 1,750 for the
+    transcript rules' violation array — which a per-bucket loop would
+    otherwise pay once per bucket and call."""
 
-    @property
-    def rule_ids(self) -> List[str]:
-        return [c.rule_id for c in self.checks]
+    def __init__(self, checks: Sequence[CompiledCheck]):
+        self.checks = tuple(checks)
 
-    # ------------------------------------------------------------------
-    def flags(self, df: DataFrame, keys: Sequence[str]) -> DataFrame:
-        """keys + one boolean pass-flag per check (codegen-friendly wide row)."""
-        cols = [F.col(k) for k in keys]
-        cols += [ch.predicate.alias(ch.rule_id) for ch in self.checks]
-        return df.select(*cols)
+    def built_from(self, checks: Sequence[CompiledCheck]) -> bool:
+        return len(checks) == len(self.checks) and all(
+            a is b for a, b in zip(checks, self.checks)
+        )
 
-    def passing(self, df: DataFrame) -> DataFrame:
-        """Rows that pass EVERY compiled check — the cleaned table a
-        pipeline feeds downstream (the validation analog of a dedup
-        keep-list). Pure codegen'd AND over the same predicates
-        :meth:`flags` renders, no shuffle, no UDF; a row whose conjunction
-        evaluates NULL (NULL input under a non-null-passing check) is
-        dropped, matching SQL WHERE semantics in the oracle mirror."""
-        if not self.checks:
-            return df
-        all_pass = reduce(lambda a, b: a & b, [ch.predicate for ch in self.checks])
-        return df.where(all_pass)
+    @cached_property
+    def flags(self) -> List[Column]:
+        return [ch.predicate.alias(ch.rule_id) for ch in self.checks]
 
-    def violations(self, df: DataFrame, keys: Sequence[str], ordered: bool = True) -> DataFrame:
-        """Materialized violation rows, one per failed (row, check).
+    @cached_property
+    def all_pass(self) -> Column:
+        return reduce(lambda a, b: a & b, [ch.predicate for ch in self.checks])
 
-        Stable ``keys`` ordering (byte-stable output per SURVEY.md §7) when
-        ``ordered`` — callers at scale can skip the sort and rely on
-        write-time sortWithinPartitions ordering instead.
-        """
-        if not self.checks:
-            # preserve key dtypes so the schema is stable whether or not any
-            # checks compiled (trivial-only plans included)
-            return df.select(
-                *[F.col(k) for k in keys],
-                *[F.lit(None).cast("string").alias(c) for c in VIOLATION_COLS],
-            ).limit(0)
+    @cached_property
+    def n_viol(self) -> Column:
+        """``_n_viol``: how many checks the row fails, every predicate
+        evaluated ONCE (``any_fail`` derives from it)."""
+        fail_flags = [(~ch.predicate).cast("long") for ch in self.checks]
+        n_viol = (
+            reduce(lambda a, b: a + b, fail_flags)
+            if fail_flags else F.lit(0).cast("long")
+        )
+        return n_viol.alias("_n_viol")
 
+    @cached_property
+    def violations(self) -> Tuple[Column, Column, List[Column]]:
+        """(any_fail filter, exploded violation struct ``v``, its fields)."""
         # pre-filter to failing rows FIRST: any_fail is a cheap codegen'd OR,
         # and the allocation-heavy struct-array + explode then touches only
         # the (typically ≪1%) failing rows — measured 4× at 97M rows
@@ -95,10 +92,139 @@ class ValidationPlan:
             for ch in self.checks
         ]
         arr = F.filter(F.array(*viol_structs), lambda x: x.isNotNull())
+        return any_fail, F.explode(arr).alias("v"), [F.col(f"v.{c}") for c in VIOLATION_COLS]
+
+    @cached_property
+    def verdicts(self) -> Tuple[List[Column], List[Column]]:
+        """(per-row ``_n_viol``/``_any_fail`` columns, per-group aggregates)."""
+        n_viol = F.col("_n_viol")
+        any_fail = F.col("_any_fail")
+        return [n_viol, (n_viol > 0).cast("long").alias("_any_fail")], [
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(any_fail).alias("fail_rows"),
+            F.sum(n_viol).alias("violation_count"),
+            (F.sum(any_fail) == 0).alias("passed"),
+        ]
+
+    @cached_property
+    def rollup(self) -> Tuple[List[Column], List[Column], List[Column], List[Column]]:
+        """(level-1 keys, level-1 aggregates, level-2 aggregates, output)."""
+        n_viol, n, order = F.col("_n_viol"), F.col("_n"), F.col("_order")
+        per_pair = [
+            F.count(F.lit(1)).alias("_n"),
+            F.sum((n_viol > 0).cast("long")).alias("_fail"),
+            F.sum(n_viol).alias("_viol"),
+        ]
+        per_key = [
+            F.sum(n).alias("rows"),
+            F.sum("_fail").alias("fail_rows"),
+            F.sum("_viol").alias("violation_count"),
+            (F.sum("_fail") == 0).alias("passed"),
+            F.count(F.lit(1)).alias("distinct_keys"),
+            F.sum(F.when(n > 1, n).otherwise(0)).alias("duplicate_rows"),
+            F.max(n).alias("max_key_rows"),
+            # each level-1 group is one order value: counting the non-NULL
+            # ones counts the key's distinct order values
+            F.count(order).alias("_d"),
+            F.sum(F.when(order.isNull(), n).otherwise(0)).alias("_nulls"),
+            F.min(order).alias("_mn"),
+            F.max(order).alias("_mx"),
+        ]
+        contiguous = chain_invariant(
+            F.col("rows"), F.col("_d"), F.col("_nulls"),
+            F.col("_mn"), F.col("_mx"), 0,
+        )
+        out = [
+            F.col(c) for c in (
+                "partition_key", "rows", "fail_rows", "violation_count", "passed",
+                "distinct_keys", "duplicate_rows", "max_key_rows",
+            )
+        ] + [contiguous.alias("contiguous")]
+        return [F.col("partition_key"), order], per_pair, per_key, out
+
+    @cached_property
+    def summary(self) -> Tuple[List[Column], List[Column], List[Column]]:
+        """(wide aggregates, exploded ``(rule_id, fail_count)`` pairs, output)."""
+        aggs = [
+            F.sum(F.when(~ch.predicate, 1).otherwise(0)).alias(f"f_{i}")
+            for i, ch in enumerate(self.checks)
+        ] + [F.count(F.lit(1)).alias("_rows")]
+        pairs = F.array(
+            *[
+                F.struct(
+                    F.lit(ch.rule_id).alias("rule_id"),
+                    F.col(f"f_{i}").alias("fail_count"),
+                )
+                for i, ch in enumerate(self.checks)
+            ]
+        )
+        out = [
+            F.col("p.rule_id").alias("rule_id"),
+            F.col("p.fail_count").cast("long").alias("fail_count"),
+            F.col("_rows").cast("long").alias("row_count"),
+        ]
+        return aggs, [F.explode(pairs).alias("p"), F.col("_rows")], out
+
+
+@dataclass
+class ValidationPlan:
+    table_rule: TableRule
+    checks: List[CompiledCheck]
+    options: CompileOptions = field(default_factory=CompileOptions)
+    _derived: Optional[_CheckColumns] = field(
+        default=None, init=False, repr=False, compare=False
+    )
+
+    @property
+    def rule_ids(self) -> List[str]:
+        return [c.rule_id for c in self.checks]
+
+    @property
+    def _cols(self) -> _CheckColumns:
+        """The Columns derived from the CURRENT checks. ``checks`` may be
+        reassigned or edited after compile (``CompileOptions.prepare_plan``),
+        so a cache built from other check objects is rebuilt; a changed
+        check must be a new ``CompiledCheck``, not one edited in place."""
+        if self._derived is None or not self._derived.built_from(self.checks):
+            self._derived = _CheckColumns(self.checks)
+        return self._derived
+
+    # ------------------------------------------------------------------
+    def flags(self, df: DataFrame, keys: Sequence[str]) -> DataFrame:
+        """keys + one boolean pass-flag per check (codegen-friendly wide row)."""
+        return df.select(*[F.col(k) for k in keys], *self._cols.flags)
+
+    def passing(self, df: DataFrame) -> DataFrame:
+        """Rows that pass EVERY compiled check — the cleaned table a
+        pipeline feeds downstream (the validation analog of a dedup
+        keep-list). Pure codegen'd AND over the same predicates
+        :meth:`flags` renders, no shuffle, no UDF; a row whose conjunction
+        evaluates NULL (NULL input under a non-null-passing check) is
+        dropped, matching SQL WHERE semantics in the oracle mirror."""
+        if not self.checks:
+            return df
+        return df.where(self._cols.all_pass)
+
+    def violations(self, df: DataFrame, keys: Sequence[str], ordered: bool = True) -> DataFrame:
+        """Materialized violation rows, one per failed (row, check).
+
+        Stable ``keys`` ordering (byte-stable output per SURVEY.md §7) when
+        ``ordered`` — callers at scale can skip the sort and rely on
+        write-time sortWithinPartitions ordering instead.
+        """
+        if not self.checks:
+            # preserve key dtypes so the schema is stable whether or not any
+            # checks compiled (trivial-only plans included)
+            return df.select(
+                *[F.col(k) for k in keys],
+                *[F.lit(None).cast("string").alias(c) for c in VIOLATION_COLS],
+            ).limit(0)
+
+        any_fail, exploded, fields = self._cols.violations
         out = (
             df.where(any_fail)
-            .select(*[F.col(k) for k in keys], F.explode(arr).alias("v"))
-            .select(*keys, *[F.col(f"v.{c}") for c in VIOLATION_COLS])
+            .select(*keys, exploded)
+            .select(*keys, *fields)
         )
         if ordered:
             out = out.orderBy(*keys, "rule_id")
@@ -154,23 +280,12 @@ class ValidationPlan:
                 F.lit(0).cast("long").alias("violation_count"),
                 F.lit(True).alias("passed"),
             )
-        # evaluate every predicate ONCE: n_viol per row, any_fail derived
-        fail_flags = [(~ch.predicate).cast("long") for ch in self.checks]
-        n_viol = reduce(lambda a, b: a + b, fail_flags)
+        per_row, aggs = self._cols.verdicts
         return (
-            df.select(pcol.alias(alias), n_viol.alias("_n_viol"))
-            .select(
-                alias,
-                "_n_viol",
-                (F.col("_n_viol") > 0).cast("long").alias("_any_fail"),
-            )
+            df.select(pcol.alias(alias), self._cols.n_viol)
+            .select(alias, *per_row)
             .groupBy(alias)
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("_any_fail").alias("fail_rows"),
-                F.sum("_n_viol").alias("violation_count"),
-                (F.sum("_any_fail") == 0).alias("passed"),
-            )
+            .agg(*aggs)
         )
 
     def rollup(self, df: DataFrame, key_col: str, order_col: str) -> DataFrame:
@@ -188,48 +303,18 @@ class ValidationPlan:
         ``uniqueness.contiguity`` verdict (chain starting at 0) of the key's
         order chain.
         """
-        fail_flags = [(~ch.predicate).cast("long") for ch in self.checks]
-        n_viol = (
-            reduce(lambda a, b: a + b, fail_flags)
-            if fail_flags else F.lit(0).cast("long")
-        )
-        per_pair = (
+        pair_keys, per_pair, per_key, out = self._cols.rollup
+        return (
             df.select(
                 F.col(key_col).alias("partition_key"),
                 F.col(order_col).alias("_order"),
-                n_viol.alias("_n_viol"),
+                self._cols.n_viol,
             )
-            .groupBy("partition_key", "_order")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.sum((F.col("_n_viol") > 0).cast("long")).alias("_fail"),
-                F.sum("_n_viol").alias("_viol"),
-            )
-        )
-        n = F.col("_n")
-        per_key = per_pair.groupBy("partition_key").agg(
-            F.sum(n).alias("rows"),
-            F.sum("_fail").alias("fail_rows"),
-            F.sum("_viol").alias("violation_count"),
-            (F.sum("_fail") == 0).alias("passed"),
-            F.count(F.lit(1)).alias("distinct_keys"),
-            F.sum(F.when(n > 1, n).otherwise(0)).alias("duplicate_rows"),
-            F.max(n).alias("max_key_rows"),
-            # each level-1 group is one order value: counting the non-NULL
-            # ones counts the key's distinct order values
-            F.count("_order").alias("_d"),
-            F.sum(F.when(F.col("_order").isNull(), n).otherwise(0)).alias("_nulls"),
-            F.min("_order").alias("_mn"),
-            F.max("_order").alias("_mx"),
-        )
-        contiguous = chain_invariant(
-            F.col("rows"), F.col("_d"), F.col("_nulls"),
-            F.col("_mn"), F.col("_mx"), 0,
-        )
-        return per_key.select(
-            "partition_key", "rows", "fail_rows", "violation_count", "passed",
-            "distinct_keys", "duplicate_rows", "max_key_rows",
-            contiguous.alias("contiguous"),
+            .groupBy(*pair_keys)
+            .agg(*per_pair)
+            .groupBy(pair_keys[0])
+            .agg(*per_key)
+            .select(*out)
         )
 
     def repair(self, df: DataFrame) -> DataFrame:
@@ -256,25 +341,5 @@ class ValidationPlan:
             return df.sparkSession.createDataFrame(
                 [], "rule_id string, fail_count long, row_count long"
             )
-        aggs = [
-            F.sum(F.when(~ch.predicate, 1).otherwise(0)).alias(f"f_{i}")
-            for i, ch in enumerate(self.checks)
-        ] + [F.count(F.lit(1)).alias("_rows")]
-        wide = df.agg(*aggs)
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(ch.rule_id).alias("rule_id"),
-                    F.col(f"f_{i}").alias("fail_count"),
-                )
-                for i, ch in enumerate(self.checks)
-            ]
-        )
-        return (
-            wide.select(F.explode(pairs).alias("p"), F.col("_rows"))
-            .select(
-                F.col("p.rule_id").alias("rule_id"),
-                F.col("p.fail_count").cast("long").alias("fail_count"),
-                F.col("_rows").cast("long").alias("row_count"),
-            )
-        )
+        aggs, pairs, out = self._cols.summary
+        return df.agg(*aggs).select(*pairs).select(*out)

@@ -187,3 +187,40 @@ def test_prepare_plan_hook(spark):
 
     plan = compile_table(df.schema and tr, df.schema, CompileOptions(prepare_plan=keep_only_minimum))
     assert plan.rule_ids == ["v.minimum"]
+
+
+def test_plan_columns_follow_checks(spark):
+    """The plan builds its predicate Columns once and reuses them, but never
+    past the checks they came from: reassigning ``checks`` (what a
+    ``prepare_plan`` hook does) or editing the list in place changes the
+    next call of every output."""
+    df = spark.createDataFrame([(1, 3), (7, 20)], "x long, y long")
+    tr = infer_table_rule(df.schema, overlay={"x": {"minimum": 5}, "y": {"maximum": 9}})
+    plan = compile_table(tr, df.schema)
+
+    def outputs():
+        return (
+            sorted((r["x"], r["rule_id"]) for r in plan.violations(df, ["x"]).collect()),
+            sorted(tuple(r) for r in plan.verdicts(df, "x")
+                   .select("partition_key", "violation_count").collect()),
+            sorted(tuple(r) for r in plan.summary(df).select("rule_id", "fail_count").collect()),
+            plan.flags(df, ["x"]).columns,
+            plan.passing(df).count(),
+            sorted(tuple(r) for r in plan.rollup(df, "x", "y")
+                   .select("partition_key", "violation_count").collect()),
+        )
+
+    both = (
+        [(1, "x.minimum"), (7, "y.maximum")], [(1, 1), (7, 1)],
+        [("x.minimum", 1), ("y.maximum", 1)], ["x", "x.minimum", "y.maximum"], 0,
+        [(1, 1), (7, 1)],
+    )
+    assert outputs() == both
+    dropped = plan.checks[1]
+    plan.checks = [c for c in plan.checks if c.keyword == "minimum"]
+    assert outputs() == (
+        [(1, "x.minimum")], [(1, 1), (7, 0)], [("x.minimum", 1)], ["x", "x.minimum"], 1,
+        [(1, 1), (7, 0)],
+    )
+    plan.checks.append(dropped)
+    assert outputs() == both

@@ -3,6 +3,8 @@ remaining buckets; results equal an uninterrupted run."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,6 +155,93 @@ def test_resume_survives_catalog_loss(env):
     direct = plan.violations(df, ["conv_id", "turn_idx"], ordered=False)
     assert resumed.count() == direct.count()
     assert resumed.exceptAll(direct).count() == 0
+
+
+def _num_buckets(spark, table):
+    """The storage-bucket count a catalog table is registered with."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").where("col_name = 'Num Buckets'")
+    return int(rows.first()["data_type"])
+
+
+def test_sub_bucket_count_from_bytes():
+    """Staged sub-buckets follow the input's bytes like Spark's file splits
+    (maxPartitionBytes 128 MB, openCostInBytes 4 MB, 4 cores): 1 for the
+    benchmark's ~311 KB buckets, 8 without size statistics, one per
+    maxPartitionBytes split for 25 GB buckets, and one per core between."""
+    from jsonschema_go_spark.lineage import sub_bucket_count
+
+    mb = 1 << 20
+    confs = dict(max_split=128 * mb, open_cost=4 * mb, parallelism=4)
+    assert sub_bucket_count(622_895, 2, **confs) == 1
+    assert sub_bucket_count(None, 2, **confs) == 8
+    assert sub_bucket_count(4096 * 25 * 1024 * mb, 4096, **confs) == 200
+    assert sub_bucket_count(300 * mb + 7, 1, **confs) == 4
+
+
+def test_fresh_session_resume_keeps_sub_bucket_count(spark, tmp_path):
+    """The staged sub-bucket count is recorded with the staged files: a
+    resume in a new session, whose split confs now size the input to fewer
+    sub-buckets, registers the files with the count they were written with
+    (registered with fewer, the bucketed scan would silently drop the rest)
+    and writes what a fresh run writes, exchange-free."""
+    generate_transcripts(spark, num_convs=200, seed=42, violation_rate=0.2).write.parquet(
+        str(tmp_path / "input")
+    )
+    df = spark.read.parquet(str(tmp_path / "input"))
+    plan = compile_table(transcript_table_rule(), df.schema)
+    io = TableIO(spark, base_path=str(tmp_path / "resumed"))
+    run = CheckpointedRun(io, "sb", num_buckets=4)
+    small_splits = {"spark.sql.files.maxPartitionBytes": "4k",
+                    "spark.sql.files.openCostInBytes": "1"}
+    try:
+        for k, v in small_splits.items():
+            spark.conf.set(k, v)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run.run(df, plan, quality_checks=True, fail_on_bucket=2)
+        written = _num_buckets(spark, run._staged_table)
+    finally:
+        for k in small_splits:
+            spark.conf.unset(k)
+    assert written > 1
+
+    spark.sql(f"DROP TABLE {run._staged_table}")
+    result = run.run(df, plan, resume=True, quality_checks=True)
+    assert result == {"processed": [2, 3], "skipped": [0, 1]}
+    assert _num_buckets(spark, run._staged_table) == written
+
+    fresh_io = TableIO(spark, base_path=str(tmp_path / "fresh"))
+    fresh = CheckpointedRun(fresh_io, "sb", num_buckets=4)
+    fresh.run(df, plan, quality_checks=True)
+    assert _num_buckets(spark, fresh._staged_table) == 1  # what the confs give now
+    for name in ("violations_sb", "verdicts_sb", "quality_sb"):
+        assert _sorted_rows(io.read(name)) == _sorted_rows(fresh_io.read(name)), name
+    lineage = "bucket", "status", "rows", "violations"
+    assert _sorted_rows(io.read("lineage").select(*lineage)) == _sorted_rows(
+        fresh_io.read("lineage").select(*lineage)
+    )
+    part = spark.table(run._staged_table).where(F.col("_bucket") == 2)
+    plan_str = plan.rollup(part, "conv_id", "turn_idx")._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan_str, plan_str
+
+
+def test_resume_restages_without_sub_bucket_record(env):
+    """Staged files without their sub-bucket record (a crash before staging
+    finished) are staged again on resume, not registered."""
+    from jsonschema_go_spark.lineage import SUB_BUCKETS_FILE
+
+    spark, df, plan, io = env
+    run = CheckpointedRun(io, "r9", num_buckets=4)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run.run(df, plan, fail_on_bucket=2)
+    spark.sql(f"DROP TABLE {run._staged_table}")
+    record, fs = io._fs_path(f"{run._staged_table}/{SUB_BUCKETS_FILE}")
+    assert fs.delete(record, False)
+
+    assert run.run(df, plan, resume=True)["processed"] == [2, 3]
+    assert fs.exists(record)
+    resumed = io.read("violations_r9").drop("bucket")
+    direct = plan.violations(df, ["conv_id", "turn_idx"], ordered=False)
+    assert _sorted_rows(resumed) == _sorted_rows(direct)
 
 
 def test_quality_checks_in_bucket_pass(env):
@@ -332,7 +421,9 @@ def test_bucket_pass_job_budget(env):
     """Regression pin: one bucket with quality_checks costs at most 5 Spark
     jobs including the flush, exactly one of them the lineage append, and
     the lineage/quality rows are JVM local relations (LocalTableScan), so
-    the flush starts no Python-worker tasks. completed_buckets is one job."""
+    the flush starts no Python-worker tasks. Over a small input the
+    violation and verdict jobs run one task each and write one file each.
+    completed_buckets is one job."""
     spark, df, plan, io = env
     sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
     run = CheckpointedRun(io, "jobs", num_buckets=1)
@@ -361,6 +452,18 @@ def test_bucket_pass_job_budget(env):
     for name in ("lineage", "quality_jobs"):
         flushed = appended[name]._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in flushed and "ExistingRDD" not in flushed, flushed
+    # a small input stages one sub-bucket per bucket: each bucket job runs
+    # one task and each bucket writes one file per output table
+    for name in ("violations_jobs", "verdicts_jobs"):
+        tasks = [
+            tracker.getStageInfo(s).numTasks
+            for j in tracker.getJobIdsForGroup(f"jobs:{name}")
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert tasks == [1], (name, tasks)
+    for name in ("violations_jobs", "verdicts_jobs", "quality_jobs"):
+        files = list(Path(io.base_path, name, "bucket=0").glob("*.parquet"))
+        assert len(files) == 1, (name, files)
 
     sc.setJobGroup("jobs:completed", "completed_buckets")
     try:
