@@ -27,8 +27,6 @@ All implementations are pure DataFrame ops — no Python in the hot path.
 
 from __future__ import annotations
 
-from typing import List, Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,41 +50,6 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 # ------------------------------------------------------------------ shingles
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of the normalized text (array<string>).
-
-    Construction: ``zip_with`` over ``n-1`` shifted slices of the words
-    array, then slice to the ``len-n+1`` valid positions. The obvious
-    ``transform(sequence(1, k), i -> array_join(slice(words, i, n)))`` form
-    is 4.2× slower (measured at sf0.1): a higher-order-function lambda
-    re-evaluates every OUTER expression it references per element, so
-    ``words`` — a regexp normalize + split — ran once per SHINGLE; here it
-    runs O(n) times per DOC (the zip_with/slice arguments). Values are
-    bit-identical (pytest + the oracle gates); the DuckDB mirror keeps the
-    per-index form (`list_transform`/`generate_series`) — DuckDB evaluates
-    the list argument once, so the quadratic trap is Spark-specific.
-
-    Trailing zip positions beyond the valid range pair with NULL padding
-    (``concat_ws`` would drop it silently) — they are cut by the final
-    ``slice`` before anything downstream can observe them, and documents
-    shorter than ``n`` words take the empty-array branch.
-    """
-    words = F.split(normalize(c), " ")
-    m = F.size(words)
-    k = m - (n - 1)
-    acc = words
-    for j in range(1, n):
-        acc = F.zip_with(
-            acc,
-            F.slice(words, j + 1, F.greatest(m - j, F.lit(0))),
-            lambda p, z: F.concat_ws(" ", p, z),
-        )
-    sh = F.when(k <= 0, F.array().cast("array<string>")).otherwise(
-        F.slice(acc, 1, k)
-    )
-    return F.array_distinct(sh)
-
-
 def _words_staged(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, _w) with ``_w`` = the normalized words array as a REAL COLUMN
     behind an ``explode(array(...))`` Generate barrier, so downstream
@@ -102,7 +65,8 @@ def _words_staged(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _shingles_of_words(n: int = 3) -> Column:
     """Distinct word n-gram shingles from the staged ``_w`` words COLUMN —
     ``transform(sequence)`` + ``element_at`` + one n-ary ``concat_ws``;
-    value-identical to :func:`word_shingles` (pytest-pinned). Only valid
+    value-identical to the ``zip_with`` reference construction in
+    ``tests/reference_forms.py`` (pytest-pinned). Only valid
     over :func:`_words_staged` output (the lambda must see a column, not an
     expression — see the docstrings of both)."""
     k = F.size("_w") - (n - 1)
@@ -248,10 +212,10 @@ def _jaccard_pairs_vectorized(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    id_dt = [f.dataType.simpleString() for f in sh.schema.fields if f.name == id_col][0]
-    pa_id = {"int": pa.int32(), "bigint": pa.int64(), "smallint": pa.int16()}.get(
-        id_dt, pa.int64()
-    )
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    id_dt = sh.schema[id_col].dataType.simpleString()
+    pa_id = to_arrow_type(sh.schema[id_col].dataType)
     # ONE pass builds the whole index: per shingle, its doc list (the
     # inverted index) — frequency IS the list length, the shingle STRING is
     # projected away before collection, and every other structure (hot-cap,
@@ -261,10 +225,6 @@ def _jaccard_pairs_vectorized(
     # (hash partitioning keeps each shingle whole) — the collect_list
     # aggregate fell back to sort-based ObjectHashAggregate and measured
     # ~6 s for the same 2.6M rows vs ~2 s for this form.
-    doc_pa_t = {
-        "int": pa.int32(), "bigint": pa.int64(), "smallint": pa.int16()
-    }.get(id_dt, pa.int64())
-
     def group_lists(batches):
         import numpy as _np
         import pyarrow as _pa
@@ -276,7 +236,7 @@ def _jaccard_pairs_vectorized(
             dcs.append(b.column(1))
         if not shs:
             yield _pa.RecordBatch.from_arrays(
-                [_pa.array([], type=_pa.list_(doc_pa_t))], names=["_docs"]
+                [_pa.array([], type=_pa.list_(pa_id))], names=["_docs"]
             )
             return
         sh_arr = _pa.concat_arrays([a.combine_chunks() if isinstance(a, _pa.ChunkedArray) else a for a in shs])
@@ -288,7 +248,7 @@ def _jaccard_pairs_vectorized(
         lens = _np.bincount(idx, minlength=len(enc.dictionary))
         offs = _np.concatenate(([0], _np.cumsum(lens)))
         out = _pa.ListArray.from_arrays(
-            _pa.array(offs, type=_pa.int32()), _pa.array(docs_np[order], type=doc_pa_t)
+            _pa.array(offs, type=_pa.int32()), _pa.array(docs_np[order], type=pa_id)
         )
         yield _pa.RecordBatch.from_arrays([out], names=["_docs"])
 
@@ -439,28 +399,6 @@ def _ranges(starts, counts):
 
 # -------------------------------------------------------------- MinHash+LSH
 
-def minhash_signature(
-    c: Column, num_hashes: int = 12, n: int = 3
-) -> List[Column]:
-    """MinHash signature columns mh0..mh{k-1}: lexicographic MIN over the
-    doc's shingles of md5(shingle || '#' || seed_i).
-
-    md5-hex-string MinHash gives bit-identical signatures in any engine with
-    md5 — the engine's portable hash family. (At 100 TB swap in xxhash64 via
-    the same structure for ~3× cheaper hashing; md5 is the parity choice.)
-    """
-    def _hasher(seed: int):
-        # NOTE: must be a 1-arg lambda — a 2-arg lambda makes F.transform
-        # pass the ARRAY INDEX as the second argument
-        suffix = F.lit(f"#{seed}")
-        return lambda s: F.md5(F.concat(s, suffix))
-
-    return [
-        F.array_min(F.transform(c, _hasher(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_table(
     df: DataFrame,
     id_col: str,
@@ -470,11 +408,12 @@ def minhash_table(
 ) -> DataFrame:
     """(id, mh0..mh{k-1}) — docs with <n words (no shingles) are dropped.
 
-    r7 shape: shingle ARRAYS stay in the JVM (word_shingles — the exact
-    normalize/zip_with construction) and cross the Arrow boundary once per
-    doc; each task then (a) dictionary-encodes its batch's shingles
-    (pyarrow, C-speed — natural text repeats shingles heavily: 2.6M shingle
-    instances over 28k distinct at sf1.0), (b) computes the k seeded md5s
+    r7 shape: shingle ARRAYS stay in the JVM (:func:`_shingles_of_words`
+    over the staged words) and cross the Arrow boundary once per doc, ids
+    passing through untouched (any id type); each task then (a)
+    dictionary-encodes its batch's shingles (pyarrow, C-speed — natural
+    text repeats shingles heavily: 2.6M shingle instances over 28k distinct
+    at sf1.0), (b) computes the k seeded md5s
     once per DISTINCT shingle (hashlib, with the md5-state copy trick), and
     (c) takes per-doc minima via argsort ranks + ``np.minimum.reduceat``
     over int32 ranks. Identical hex-string minima to the explode +
@@ -493,9 +432,6 @@ def minhash_table(
     import pyarrow as pa
 
     id_dt = df.schema[id_col].dataType.simpleString()
-    pa_id = {"int": pa.int32(), "bigint": pa.int64(), "smallint": pa.int16()}.get(
-        id_dt, pa.int64()
-    )
     k = num_hashes
     suffixes = [f"#{i}".encode() for i in range(k)]
 
@@ -510,8 +446,7 @@ def minhash_table(
             arrs = batch.column(1)
             if len(ids) == 0:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array([], type=pa_id)]
-                    + [pa.array([], type=pa.string()) for _ in range(k)],
+                    [ids] + [pa.array([], type=pa.string()) for _ in range(k)],
                     names=["_id"] + [f"mh{i}" for i in range(k)],
                 )
                 continue
@@ -533,7 +468,7 @@ def minhash_table(
                     h.update(suffixes[i])
                     digs[i][j] = h.hexdigest().encode()
             starts = np.concatenate(([0], np.cumsum(lengths)[:-1]))
-            out_cols = [ids.cast(pa_id)]
+            out_cols = [ids]
             for i in range(k):
                 order = np.argsort(digs[i], kind="stable")
                 rank = np.empty(m, dtype=np.int64)
@@ -555,23 +490,6 @@ def minhash_table(
         ", ".join([f"_id {id_dt}"] + [f"mh{i} string" for i in range(k)]),
     )
     return out.withColumnRenamed("_id", id_col)
-
-
-def _minhash_table_agg(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 12,
-    n: int = 3,
-) -> DataFrame:
-    """The round-6 explode + k×min(md5) aggregation form — kept as the
-    ground truth :func:`minhash_table` is pinned against in tests."""
-    sh = shingle_table(df, id_col, text_col, n)
-    aggs = [
-        F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def lsh_candidate_pairs(
@@ -713,7 +631,7 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    global _LAST_ROUNDS, _LAST_EDGES
+    global _LAST_ROUNDS
     if local_finish_threshold and edges.count() <= local_finish_threshold:
         # r7: the INITIAL distinct edge set is already below the small-graph
         # cutoff — go straight to the driver union-find (output contract is
@@ -723,7 +641,7 @@ def connected_components(
         _LAST_ROUNDS = 0
         out = _local_finish(edges)
         _release_checkpoint(edges)
-        _LAST_EDGES = None
+        _park_edges(None, edges.sparkSession)
         return out
     prev = None
     converged = False
@@ -767,7 +685,7 @@ def connected_components(
             # contracted edge set — release it, and record that no
             # distributed edge set backs the (driver-local) result
             _release_checkpoint(edges)
-            _LAST_EDGES = None
+            _park_edges(None, edges.sparkSession)
             return out
     _LAST_ROUNDS = rounds
     if not converged:
@@ -786,12 +704,7 @@ def connected_components(
     # released here — its handle is exposed so a caller that materializes
     # the labels elsewhere (e.g. its own localCheckpoint) can release it
     # via _release_checkpoint(_LAST_EDGES) once nothing reads them again.
-    # A previous run's edge set still parked here is superseded by
-    # definition — release it before overwriting (r7, ADVICE r6: the bare
-    # overwrite lost the only handle to the prior checkpointed edge set).
-    if _LAST_EDGES is not None and _LAST_EDGES.sparkSession is edges.sparkSession:
-        _release_checkpoint(_LAST_EDGES)
-    _LAST_EDGES = edges
+    _park_edges(edges, edges.sparkSession)
     return (
         edges.select(F.col("u").alias("node"), F.col("v").alias("component"))
         .union(edges.select(F.col("v").alias("node"), F.col("v").alias("component")))
@@ -909,6 +822,18 @@ def _local_finish(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(out, schema)
 
 
+def _park_edges(edges, spark) -> None:
+    """Point ``_LAST_EDGES`` at this run's converged edge set (``None`` for
+    a driver-local result). A previous run's edge set still parked there is
+    superseded by definition, so it is released first — on every exit, or
+    a distributed run followed by a local-finish one pins it until session
+    end (the bare overwrite lost the only handle to it)."""
+    global _LAST_EDGES
+    if _LAST_EDGES is not None and _LAST_EDGES.sparkSession is spark:
+        _release_checkpoint(_LAST_EDGES)
+    _LAST_EDGES = edges
+
+
 def duplicate_clusters(
     pairs: DataFrame, src: str = "id_a", dst: str = "id_b", max_iter: int = 30
 ) -> DataFrame:
@@ -944,22 +869,6 @@ def dedup_keep_list(
 
 # ------------------------------------------------------------------ SimHash
 
-_HEX = "0123456789abcdef"
-
-
-def _hex_digit_val(h: Column, pos: int) -> Column:
-    """Value 0-15 of hex digit `pos` (0-based) of an md5 hex string —
-    arithmetic-only (instr into the hex alphabet), portable to SQL."""
-    return F.instr(F.lit(_HEX), F.substring(h, pos + 1, 1)) - 1
-
-
-def _bit_from_hex(h: Column, bit: int) -> Column:
-    """Bit `bit` (0 = MSB of digit 0) of the hex string, as 0/1 int."""
-    d = _hex_digit_val(h, bit // 4)
-    shift = 3 - (bit % 4)
-    return F.floor(d / F.lit(2 ** shift)) % 2
-
-
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per doc → ``(id, simhash_hex)``.
 
@@ -973,8 +882,8 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     extraction the SQL form used), counts (doc, word) multiplicities with
     one ``np.unique``, and accumulates the 64 vote sums via
     ``np.add.reduceat``. Votes are exact integers, so signatures are
-    bit-identical to the round-6 two-level aggregation (kept below as
-    :func:`_simhash64_agg`, pytest-pinned + oracle-gated); that form spent
+    bit-identical to the round-6 two-level aggregation (the ground truth in
+    ``tests/reference_forms.py``, pytest-pinned + oracle-gated); that form spent
     ~2 s at sf1.0 evaluating 64 digit-extraction aggregate expressions per
     distinct (doc, word) — this one ~0.6 s.
     """
@@ -982,9 +891,6 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     spark = df.sparkSession
     id_dt = df.schema[id_col].dataType.simpleString()
-    pa_id = {"int": pa.int32(), "bigint": pa.int64(), "smallint": pa.int16()}.get(
-        id_dt, pa.int64()
-    )
 
     def sign(batches):
         import hashlib
@@ -997,7 +903,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             arrs = batch.column(1)
             if len(ids) == 0:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array([], type=pa_id), pa.array([], type=pa.string())],
+                    [ids, pa.array([], type=pa.string())],
                     names=["_id", "simhash_hex"],
                 )
                 continue
@@ -1037,12 +943,12 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 hexes = [
                     np.packbits(b).tobytes().hex() for b in bits
                 ]
-                out_ids = batch.column(0).take(pa.array(present))
+                out_ids = ids.take(pa.array(present))
             else:
                 hexes = []
-                out_ids = pa.array([], type=batch.column(0).type)
+                out_ids = ids.slice(0, 0)
             yield pa.RecordBatch.from_arrays(
-                [out_ids.cast(pa_id), pa.array(hexes, type=pa.string())],
+                [out_ids, pa.array(hexes, type=pa.string())],
                 names=["_id", "simhash_hex"],
             )
 
@@ -1052,43 +958,6 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     out = staged.mapInArrow(sign, f"_id {id_dt}, simhash_hex string")
     return out.withColumnRenamed("_id", id_col)
-
-
-def _simhash64_agg(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """The round-6 two-level aggregation SimHash — kept as the ground truth
-    :func:`simhash64` is pinned against in tests.
-
-    Explode(words) → count per (doc, word-hash) → 64 weighted SUMs per doc;
-    the first (cheap, one-counter) agg collapses repeated words BEFORE the
-    64 bit-extraction expressions run (Zipf), and the per-vocab-word bit
-    table + broadcast join variant measured WORSE (r5 notes).
-    """
-    words = (
-        df.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.explode(F.split(normalize(F.col(text_col)), " ")).alias("w"),
-        )
-        .where(F.length("w") > 0)
-        .select(F.col(id_col), F.md5(F.col("w")).alias("h"))
-    )
-    wc = words.groupBy(id_col, "h").agg(F.count(F.lit(1)).alias("cnt"))
-    aggs = [
-        F.sum(F.col("cnt") * (_bit_from_hex(F.col("h"), b) * 2 - 1)).alias(f"s{b}")
-        for b in range(64)
-    ]
-    sums = wc.groupBy(id_col).agg(*aggs)
-    # bit b of signature = 1 if vote sum > 0; re-assemble as 16 hex digits
-    hex_digits = []
-    for d in range(16):
-        val = None
-        for j in range(4):
-            bit = (F.col(f"s{d * 4 + j}") > 0).cast("int") * (2 ** (3 - j))
-            val = bit if val is None else (val + bit)
-        hex_digits.append(F.substring(F.lit(_HEX), 1, 16).substr(val + 1, F.lit(1)))
-    return sums.select(
-        F.col(id_col), F.concat(*hex_digits).alias("simhash_hex")
-    )
 
 
 def simhash_near_pairs(

@@ -1,9 +1,21 @@
 """Similarity search over embedding columns (driver mandate): brute-force
-cosine top-k baseline + sign-LSH bucketed variant for the scale path.
+cosine top-k baseline, IVF and sign-LSH bucketed variants for the scale
+path, and exact embedding near-dup pairs.
 
-Dot products run via ``F.zip_with`` + ``F.aggregate`` — a *sequential left
-fold* in index order, so the double-precision result is deterministic and
-bit-comparable with an oracle that folds in the same order.
+Dot products in SQL run via ``F.zip_with`` + ``F.aggregate`` — a *sequential
+left fold* in index order, so the double-precision result is deterministic
+and bit-comparable with an oracle that folds in the same order.
+
+The Arrow kernels (sampled near-dup audit, LSH candidate verification, IVF
+cell assignment) share ONE numpy cosine: :func:`_seq_dot` replays that fold
+one dimension at a time (``acc = acc + a_j * b_j``), :func:`_np_seq_norms`
+is the square root of a vector's fold with itself, and :func:`_seq_cos`
+applies the SQL form's zero-norm guard (−1.0) and cross-length rule (NULL).
+Each double equals the SQL expression's bit for bit (pytest-pinned against
+the interpreted forms), so a kernel changes the cost of a query, never one
+output bit. Vectors reach the kernel through one grouping,
+:func:`_by_len`: an Arrow list column → one float64 matrix per vector
+length, gathered from the flat values buffer with no per-row Python.
 
 Scale notes:
 - brute force is O(Q × N) after broadcasting the Q query vectors — the right
@@ -15,7 +27,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import NamedTuple, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -39,22 +51,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def _norms_py(cents: list) -> list:
-    """Driver-side centroid norms, bit-identical to :func:`norm`'s SQL fold:
-    Python floats are IEEE-754 doubles and the sum runs in the same
-    sequential index order, so ``acc + x*x`` rounds identically."""
-    import math
-
-    return [math.sqrt(sum_fold(c)) for c in cents]
-
-
-def sum_fold(xs) -> float:
-    acc = 0.0
-    for x in xs:
-        acc = acc + float(x) * float(x)
-    return acc
-
-
 def _safe_ratio(d: Column, na: Column, nb: Column) -> Column:
     """dot/(na*nb) with a zero-norm guard: cosine is undefined for a zero
     vector, and x/0.0 aborts the job under ANSI mode (while NaN would poison
@@ -68,6 +64,169 @@ def cosine(a: Column, b: Column) -> Column:
     return _safe_ratio(dot(a, b), norm(a), norm(b))
 
 
+# ------------------------------------------------------------ numpy kernel
+
+def _seq_dot(A, B):
+    """Dot products over the last axis of ``A`` and ``B`` — leading axes
+    broadcast, so aligned row pairs and ``A[:, None]`` × ``B[None]`` matrices
+    take the same loop — folded one dimension at a time in index order: the
+    IEEE operations of :func:`dot`'s SQL fold, in its order."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for j in range(A.shape[-1]):
+        acc = acc + A[..., j] * B[..., j]
+    return acc
+
+
+def _np_seq_norms(mat):
+    """Row norms, bit-identical to :func:`norm`'s SQL aggregate."""
+    import numpy as np
+
+    return np.sqrt(_seq_dot(mat, mat))
+
+
+def _seq_cos(A, B, na, nb):
+    """:func:`_seq_dot` cosine with :func:`cosine`'s SQL semantics: −1.0
+    where either norm is 0 (the guard fires before the dot), NaN across
+    vector lengths (``zip_with`` null-pads those into a NULL dot). A NULL
+    element is NaN here and NULL there; either way the pair clears no
+    threshold."""
+    import numpy as np
+
+    denom = na * nb
+    dots = _seq_dot(A, B) if A.shape[-1] == B.shape[-1] else np.nan
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, -1.0, dots / np.where(denom == 0.0, 1.0, denom))
+
+
+class _Grouped(NamedTuple):
+    """An Arrow vector column grouped by vector length (:func:`_by_len`)."""
+
+    lens: object  # per row: vector length, -1 for a NULL vector
+    pos: object  # per row: index inside its length group
+    norms: object  # per row: _np_seq_norms, NaN for a NULL vector
+    groups: dict  # length -> (row indices, (rows, length) float64 matrix)
+
+
+def _by_len(vecs) -> _Grouped:
+    """Group an Arrow ``list<number>`` column by vector length: one gather
+    per distinct length from the flat values buffer, no per-row Python.
+    NULL elements become NaN, which poisons the fold the way NULL poisons
+    the SQL fold."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    lens = (
+        pc.fill_null(pc.list_value_length(vecs), -1)
+        .to_numpy(zero_copy_only=False)
+        .astype(np.int64)
+    )
+    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    sizes = np.maximum(lens, 0)
+    starts = np.cumsum(sizes) - sizes
+    pos = np.zeros(len(lens), dtype=np.int64)
+    norms = np.full(len(lens), np.nan)
+    groups = {}
+    for ln in np.unique(lens[lens >= 0]).tolist():
+        rows = np.nonzero(lens == ln)[0]
+        mat = flat[starts[rows][:, None] + np.arange(ln)]
+        pos[rows] = np.arange(len(rows))
+        norms[rows] = _np_seq_norms(mat)
+        groups[ln] = (rows, mat)
+    return _Grouped(lens, pos, norms, groups)
+
+
+def _pair_cos(a: _Grouped, ia, b: _Grouped, ib):
+    """:func:`_seq_cos` of the row pairs ``(a[ia[k]], b[ib[k]])`` → one
+    double per pair, NaN where a side is a NULL vector."""
+    import numpy as np
+
+    la, lb = a.lens[ia], b.lens[ib]
+    cos = np.full(len(ia), np.nan)
+    for x, (_, A) in a.groups.items():
+        for y, (_, B) in b.groups.items():
+            sel = np.nonzero((la == x) & (lb == y))[0]
+            if len(sel):
+                ra, rb = ia[sel], ib[sel]
+                cos[sel] = _seq_cos(
+                    A[a.pos[ra]], B[b.pos[rb]], a.norms[ra], b.norms[rb]
+                )
+    return cos
+
+
+def _pairs_batch(ids_a, ia, ids_b, ib, cos):
+    """``(id_a, id_b, _rawcos)`` Arrow batch; ids are taken by position, so
+    any id type passes through unchanged."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            ids_a.take(pa.array(ia, type=pa.int64())),
+            ids_b.take(pa.array(ib, type=pa.int64())),
+            pa.array(cos, type=pa.float64()),
+        ],
+        names=["id_a", "id_b", "_rawcos"],
+    )
+
+
+def _round_filter(scored: DataFrame, threshold: float) -> DataFrame:
+    """The exact ``round(…, 6)`` + threshold filter over a kernel's raw-cosine
+    superset (it keeps ``raw ≥ threshold − 1e-6``, covering the half-up
+    round-at-6 boundary), so emitted values and filter semantics are the SQL
+    form's."""
+    return scored.select(
+        "id_a", "id_b", F.round(F.col("_rawcos"), 6).alias("cos")
+    ).where(F.col("cos") >= threshold)
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(_id, _v)``: the non-NULL vectors, cast to double."""
+    return df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("_id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    )
+
+
+def _broadcast_vectors(side: DataFrame, slot: str):
+    """Collect a :func:`_vectors` table once and broadcast ``(ids,
+    _by_len(vectors))``, releasing the slot's previous broadcast."""
+    from .dedup import _supersede_broadcast
+
+    tbl = side.toArrow()
+    return _supersede_broadcast(
+        side.sparkSession,
+        slot,
+        (tbl.column("_id").combine_chunks(), _by_len(tbl.column("_v"))),
+    )
+
+
+# ------------------------------------------------------------------ top-k
+
+def _queries(rows: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Query side ``(query_id, _qv, _qn)``, the norm hoisted once per query."""
+    return rows.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("_qv"),
+        norm(F.col(vec_col)).alias("_qn"),
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``(query_id, neighbor_id, cos)`` rows →
+    ``(query_id, neighbor_id, rank, cos)``. Deterministic tie-break:
+    (cos desc, neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cos")
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     id_col: str,
@@ -78,13 +237,9 @@ def cosine_topk(
     """Brute-force cosine top-k → ``(query_id, neighbor_id, rank, cos)``.
 
     Query vectors are broadcast (small side); candidates stream through one
-    scan. Deterministic tie-break: (cos desc, neighbor_id asc).
+    scan. Ties break on (cos desc, neighbor_id asc).
     """
-    q = df.where(F.col(id_col).isin(*list(query_ids))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
+    q = _queries(df.where(F.col(id_col).isin(*list(query_ids))), id_col, vec_col)
     cand = df.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
@@ -102,231 +257,74 @@ def cosine_topk(
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(scored, k)
 
+
+# -------------------------------------------------------- near-dup pairs
 
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    sample_mod: Optional[int] = None,
+    *,
+    sample_mod: int,
 ) -> DataFrame:
-    """EXACT embedding near-duplicates: pairs with cosine ≥ threshold →
-    ``(id_a, id_b, cos)``. ``sample_mod`` restricts BOTH sides to the
-    deterministic ``id % sample_mod == 0`` corpus sample — the audit
-    semantics: estimate the near-dup rate from all pairs *within* a
-    1/sample_mod sample, cost O((N/mod)²) instead of O(N²). (The earlier
-    left-side-only sampling still compared the sample against the FULL
-    corpus — an unbounded O(N²/mod) cartesian behind a gated query name.)
-
-    The sampled form runs VECTORIZED (round 7): the bounded sample matrix is
-    broadcast once and each task scores its Arrow batch of sample rows
-    against it with per-dimension numpy passes that replay the exact
-    sequential IEEE fold of :func:`dot`/:func:`norm` (bit-identical doubles
-    — pytest-asserted), instead of evaluating an interpreted
-    ``zip_with``+``aggregate`` fold per pair inside a cartesian join
-    (measured 96 s → ~3 s at sf1.0, 12.5M pairs × 64 dims). The audit
-    contract already bounds the sample (it IS the audit's working set), so
-    broadcasting it is the same memory class as `cosine_topk`'s query
-    broadcast.
-
-    With ``sample_mod=None`` it is the full all-pairs compare — DO NOT run
-    that form at scale; it exists as the ground truth the banded path is
-    verified against. No broadcast hint — Catalyst plans a partitioned
-    cartesian product, so neither side must fit in executor memory. For the
+    """EXACT embedding near-duplicates within the deterministic
+    ``id % sample_mod == 0`` corpus sample: pairs with cosine ≥ threshold →
+    ``(id_a, id_b, cos)``. This is the audit semantics: estimate the
+    near-dup rate from all pairs *within* a 1/sample_mod sample, at cost
+    O((N/mod)²) instead of O(N²). BOTH sides are sampled (the earlier
+    left-side-only sampling compared the sample against the FULL corpus — an
+    unbounded O(N²/mod) cartesian behind a gated query name). For the
     full-corpus scale path use :func:`lsh_near_dup_pairs` (banded
     candidates, exact verify).
-    """
-    if sample_mod:
-        return _sampled_near_dup_pairs_vectorized(
-            df, id_col, vec_col, threshold, sample_mod
-        )
-    # norms once per vector (not per pair): each pair costs ONE fold (the
-    # dot), not three — same floating-point value, 2.5× fewer interpreted ops
-    base = df
-    a = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        norm(F.col(vec_col)).alias("_na"),
-    )
-    b = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        norm(F.col(vec_col)).alias("_nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                _safe_ratio(dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")), 6
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
 
-
-def _np_seq_norms(mat):
-    """Row norms via the same sequential per-dimension IEEE fold as
-    :func:`norm` — ``acc = acc + v_j * v_j`` in index order, then sqrt —
-    so every double is bit-identical to the SQL aggregate's."""
-    import numpy as np
-
-    acc = np.zeros(mat.shape[0])
-    for j in range(mat.shape[1]):
-        acc = acc + mat[:, j] * mat[:, j]
-    return np.sqrt(acc)
-
-
-def _sampled_near_dup_pairs_vectorized(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float, sample_mod: int
-) -> DataFrame:
-    """Vectorized audit-sample near-dup pairs (see
-    :func:`embedding_near_dup_pairs`). The sample (the audit's bounded
-    working set) is collected once and broadcast; tasks stream their own
-    Arrow batch of sample rows against it. Per-dimension numpy passes
-    replay :func:`dot`'s sequential fold order exactly, so the raw cosines
-    are bit-identical to the expression form; the final ``round(…, 6)`` and
-    threshold filter stay in Spark so the emitted values and filter
-    semantics are the same expressions as before. Python pre-filters to a
-    small SUPERSET (``raw ≥ threshold − 1e-6``, covering the half-up
-    round-at-6 boundary; NaN/NULL-input pairs compare False and drop,
-    matching the NULL-cos drop of the join form).
-
-    Vectors are grouped by length on both sides and only equal-length
-    blocks are scored — the join form's ``zip_with`` null-pads unequal
-    lengths into a NULL dot, so cross-length pairs never pass there either.
+    The sample is the audit's bounded working set, so it is collected once
+    and broadcast — the same memory class as `cosine_topk`'s query
+    broadcast. Each task scores its Arrow batch of sample rows against it
+    with :func:`_seq_cos`, one block per pair of vector lengths, and keeps
+    ``id_a < id_b``. The interpreted ``zip_with``+``aggregate`` cartesian it
+    replaced (96 s → ~3 s at sf1.0, 12.5M pairs × 64 dims) is the
+    ground truth in ``tests/reference_forms.py``.
     """
     import numpy as np
-    import pyarrow as pa
 
     spark = df.sparkSession
     id_dt = df.schema[id_col].dataType.simpleString()
-    pa_id = {"int": pa.int32(), "bigint": pa.int64(), "smallint": pa.int16()}.get(
-        id_dt, pa.int64()
-    )
-    side = (
-        df.where(F.col(id_col) % sample_mod == 0)
-        .where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
-    )
-    # the bounded audit sample — ids + vectors only (the documented contract:
-    # the sample is the audit's working set and must fit one broadcast)
-    rows = side.collect()
-    by_len: dict = {}
-    for r in rows:
-        v = r["_v"]
-        by_len.setdefault(len(v), ([], []))
-        ids, vecs = by_len[len(v)]
-        ids.append(r["_id"])
-        vecs.append(v)
-    groups = {}
-    for ln, (ids, vecs) in by_len.items():
-        # None elements become NaN under an explicit float64 dtype; NaN
-        # propagates through the fold and fails every >= comparison — the
-        # same drop the NULL-poisoned SQL fold produces
-        mat = np.array(vecs, dtype=np.float64)
-        if mat.ndim == 1:  # zero-length vectors
-            mat = mat.reshape(len(vecs), 0)
-        groups[ln] = (
-            np.array(ids, dtype=np.int64),
-            mat,
-            _np_seq_norms(mat),
-        )
-    from .dedup import _supersede_broadcast
-
-    bc = _supersede_broadcast(spark, f"neardup_sample:{id_col}", groups)
-    # superset margin covering the HALF_UP round-at-6-digits boundary
+    side = _vectors(df.where(F.col(id_col) % sample_mod == 0), id_col, vec_col)
+    bc = _broadcast_vectors(side, f"neardup_sample:{id_col}")
     pre_thr = threshold - 1e-6
 
     def score(batches):
-        g = bc.value
+        s_ids, s = bc.value
+        s_num = s_ids.to_numpy(zero_copy_only=False)
         for batch in batches:
-            a_ids_all = batch.column("_id").to_numpy(zero_copy_only=False)
-            a_vecs = batch.column("_v").to_pylist()
-            # group the batch rows by vector length to match the sample side
-            a_by_len: dict = {}
-            for i, v in enumerate(a_vecs):
-                a_by_len.setdefault(len(v), []).append(i)
-            out_a, out_b, out_c = [], [], []
-            for ln, idxs in a_by_len.items():
-                a_mat = np.array([a_vecs[i] for i in idxs], dtype=np.float64)
-                if a_mat.ndim == 1:
-                    a_mat = a_mat.reshape(len(idxs), 0)
-                a_ids = a_ids_all[idxs].astype(np.int64)
-                a_nrm = _np_seq_norms(a_mat)
-                if ln in g:
-                    b_ids, b_mat, b_nrm = g[ln]
-                    # sequential-order dot: one fused multiply+add pass per
-                    # dim, identical rounding to the SQL fold per (pair, dim)
-                    acc = np.zeros((a_mat.shape[0], b_mat.shape[0]))
-                    for j in range(ln):
-                        acc = acc + a_mat[:, j][:, None] * b_mat[:, j][None, :]
-                    denom = a_nrm[:, None] * b_nrm[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = np.where(
-                            denom == 0.0, -1.0, acc / np.where(denom == 0.0, 1.0, denom)
-                        )
-                    mask = (a_ids[:, None] < b_ids[None, :]) & (cos >= pre_thr)
-                    ai, bi = np.nonzero(mask)
-                    out_a.append(a_ids[ai])
-                    out_b.append(b_ids[bi])
-                    out_c.append(cos[ai, bi])
-                if pre_thr <= -1.0:
-                    # cross-length pairs: the join form's zero-norm guard
-                    # fires BEFORE the null-padded dot, so a pair with either
-                    # norm exactly 0 scores -1.0 even across lengths; all
-                    # other cross-length pairs have a NULL dot and drop.
-                    # Only reachable at threshold ≤ -1.0 (+ rounding margin).
-                    for ln_b, (b_ids, _bm, b_nrm) in g.items():
-                        if ln_b == ln:
-                            continue
-                        # the guard tests denom == 0, so a NaN norm (NULL
-                        # element in the vector) never qualifies: NaN*0 != 0
-                        zmask = (a_ids[:, None] < b_ids[None, :]) & (
-                            (a_nrm[:, None] * b_nrm[None, :]) == 0.0
-                        )
-                        ai, bi = np.nonzero(zmask)
-                        out_a.append(a_ids[ai])
-                        out_b.append(b_ids[bi])
-                        out_c.append(np.full(len(ai), -1.0))
-            if out_a:
-                ids_a = np.concatenate(out_a)
-                ids_b = np.concatenate(out_b)
-                coss = np.concatenate(out_c)
-            else:
-                ids_a = np.array([], dtype=np.int64)
-                ids_b = np.array([], dtype=np.int64)
-                coss = np.array([], dtype=np.float64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids_a).cast(pa_id),
-                    pa.array(ids_b).cast(pa_id),
-                    pa.array(coss, type=pa.float64()),
-                ],
-                names=["id_a", "id_b", "_rawcos"],
+            ids = batch.column("_id")
+            a_num = ids.to_numpy(zero_copy_only=False)
+            a = _by_len(batch.column("_v"))
+            pos_a, pos_b, coss = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)], [np.zeros(0)]
+            for ra, A in a.groups.values():
+                for rb, B in s.groups.values():
+                    cos = _seq_cos(
+                        A[:, None], B[None], a.norms[ra][:, None], s.norms[rb][None]
+                    )
+                    ai, bi = np.nonzero(
+                        (a_num[ra][:, None] < s_num[rb][None]) & (cos >= pre_thr)
+                    )
+                    pos_a.append(ra[ai])
+                    pos_b.append(rb[bi])
+                    coss.append(cos[ai, bi])
+            yield _pairs_batch(
+                ids, np.concatenate(pos_a), s_ids, np.concatenate(pos_b),
+                np.concatenate(coss),
             )
 
     n_parts = max(spark.sparkContext.defaultParallelism, 1)
     scored = side.repartition(n_parts).mapInArrow(
         score, f"id_a {id_dt}, id_b {id_dt}, _rawcos double"
     )
-    return scored.select(
-        "id_a", "id_b", F.round(F.col("_rawcos"), 6).alias("cos")
-    ).where(F.col("cos") >= threshold)
+    return _round_filter(scored, threshold)
 
 
 def lsh_near_dup_pairs(
@@ -360,8 +358,7 @@ def lsh_near_dup_pairs(
     """
     sig_udf = sign_lsh_bucket_vectorized(dim, bands * rows_per_band, seed)
     # ids only through the explode + self-join: carrying the vectors would
-    # duplicate them bands× through the shuffle; they are re-attached to the
-    # deduped candidate pairs with two id-equi-joins instead.
+    # duplicate them bands× through the shuffle.
     # The signature table is localCheckpoint-ed ONCE (r7): it feeds up to
     # three consumers (hot-bucket freq, both self-join sides) and the
     # round-6 plan re-ran the Arrow signature UDF + corpus construction for
@@ -405,24 +402,22 @@ def lsh_near_dup_pairs(
         .dropDuplicates(["id_a", "id_b"])  # a pair may collide in many bands
     )
     # exact verification (r7): the candidate set is collision-dominated
-    # (1.45M pairs at sf1.0 for ~2k true ones) and the round-6 tail both
-    # SHUFFLED a 64-double vector payload per candidate side through two
-    # id-joins (guide §8: decide with small rows, move big rows once) and
-    # paid an interpreted zip_with fold per pair. When the vector table
-    # fits the broadcast guard, candidates now stay IDS-ONLY end to end:
-    # each task looks both sides up in one broadcast matrix and replays the
-    # sequential IEEE fold in numpy (bit-identical doubles; zero-norm /
-    # NULL / length-mismatch semantics replicated — pytest-pinned). Python
-    # emits a raw-cos superset; Spark applies the identical round(…,6) +
-    # threshold filter. Beyond the guard the join+vectorized-verify form
-    # runs instead (no broadcast, unchanged scale story).
-    import pyarrow as pa
+    # (1.45M pairs at sf1.0 for ~2k true ones). When the vector table fits
+    # the broadcast guard, candidates stay IDS-ONLY end to end: each task
+    # looks both sides up in one broadcast table (guide §8: decide with
+    # small rows, move big rows once). Beyond the guard the vectors are
+    # re-attached with two id-equi-joins instead (no broadcast, unchanged
+    # scale story). Both score with _pair_cos; Python emits a raw-cos
+    # superset and _round_filter applies the exact SQL filter.
+    import numpy as np
 
     id_dt = df.schema[id_col].dataType.simpleString()
+    schema = f"id_a {id_dt}, id_b {id_dt}, _rawcos double"
     pre_thr = threshold - 1e-6
     if max_broadcast_vectors and df.limit(max_broadcast_vectors + 1).count() <= max_broadcast_vectors:
-        return _lsh_verify_broadcast(
-            df, id_col, vec_col, cand, threshold, pre_thr, id_dt
+        return _round_filter(
+            cand.mapInArrow(_lsh_verify_broadcast(df, id_col, vec_col, pre_thr), schema),
+            threshold,
         )
     vecs = df.select(
         F.col(id_col).alias("_vid"),
@@ -435,298 +430,49 @@ def lsh_near_dup_pairs(
         .select("id_a", "id_b", "_va", F.col("_vv").alias("_vb"))
     )
 
-    def _fixed_matrix(col, n):
-        """(n, L) float64 matrix when every row is a same-length, null-free
-        list (the embedding fast path — numpy reshape of the flat values
-        buffer, no per-row Python), else None."""
-        import numpy as np
-        import pyarrow.compute as pc
-
-        col = col.combine_chunks() if not isinstance(col, pa.Array) else col
-        if col.null_count:
-            return None
-        lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-        if len(lens) == 0 or lens.min() != lens.max():
-            return None
-        flat = col.flatten()
-        if flat.null_count:
-            return None
-        vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-        return vals.reshape(n, int(lens[0]))
-
     def verify(batches):
-        import numpy as np
-
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([], type=batch.column(0).type),
-                        pa.array([], type=batch.column(1).type),
-                        pa.array([], type=pa.float64()),
-                    ],
-                    names=["id_a", "id_b", "_rawcos"],
-                )
-                continue
-            A = _fixed_matrix(batch.column(2), n)
-            B = _fixed_matrix(batch.column(3), n)
-            if A is not None and B is not None and A.shape[1] == B.shape[1]:
-                na = _np_seq_norms(A)
-                nb = _np_seq_norms(B)
-                denom = na * nb
-                acc = np.zeros(n)
-                for j in range(A.shape[1]):
-                    acc = acc + A[:, j] * B[:, j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(
-                        denom == 0.0, -1.0, acc / np.where(denom == 0.0, 1.0, denom)
-                    )
-                m = cos >= pre_thr
-                keep_rows = np.nonzero(m)[0]
-                coss = cos[m]
-            else:
-                # slow path: ragged/NULL-bearing batch — per-row grouping
-                va = batch.column(2).to_pylist()
-                vb = batch.column(3).to_pylist()
-                keep_list, cos_list = [], []
-                groups: dict = {}
-                for i in range(n):
-                    a, b = va[i], vb[i]
-                    if a is None or b is None:
-                        continue
-                    groups.setdefault((len(a), len(b)), []).append(i)
-                for (la, lb), idxs in groups.items():
-                    Am = np.array([va[i] for i in idxs], dtype=np.float64).reshape(
-                        len(idxs), la
-                    )
-                    Bm = np.array([vb[i] for i in idxs], dtype=np.float64).reshape(
-                        len(idxs), lb
-                    )
-                    na = _np_seq_norms(Am)
-                    nb = _np_seq_norms(Bm)
-                    denom = na * nb
-                    if la == lb:
-                        acc = np.zeros(len(idxs))
-                        for j in range(la):
-                            acc = acc + Am[:, j] * Bm[:, j]
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            cos = np.where(
-                                denom == 0.0,
-                                -1.0,
-                                acc / np.where(denom == 0.0, 1.0, denom),
-                            )
-                    else:
-                        # zip_with null-pads → NULL dot; only the zero-norm
-                        # guard can still emit (-1.0), as in the join form
-                        cos = np.where(denom == 0.0, -1.0, np.nan)
-                    m = cos >= pre_thr
-                    keep_list.extend(idxs[i] for i in np.nonzero(m)[0])
-                    cos_list.extend(cos[m])
-                keep_rows = np.array(keep_list, dtype=np.int64)
-                coss = np.array(cos_list, dtype=np.float64)
-            take = pa.array(keep_rows.astype(np.int64))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).take(take),
-                    batch.column(1).take(take),
-                    pa.array(coss.astype(np.float64)),
-                ],
-                names=["id_a", "id_b", "_rawcos"],
+            rows = np.arange(batch.num_rows)
+            cos = _pair_cos(
+                _by_len(batch.column(2)), rows, _by_len(batch.column(3)), rows
             )
+            keep = np.nonzero(cos >= pre_thr)[0]
+            yield _pairs_batch(batch.column(0), keep, batch.column(1), keep, cos[keep])
 
-    scored = joined.mapInArrow(
-        verify, f"id_a {id_dt}, id_b {id_dt}, _rawcos double"
-    )
-    return scored.select(
-        "id_a", "id_b", F.round(F.col("_rawcos"), 6).alias("cos")
-    ).where(F.col("cos") >= threshold)
+    return _round_filter(joined.mapInArrow(verify, schema), threshold)
 
 
-def _lsh_verify_broadcast(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cand: DataFrame,
-    threshold: float,
-    pre_thr: float,
-    id_dt: str,
-) -> DataFrame:
-    """Candidate verification against a BROADCAST vector table (see
-    :func:`lsh_near_dup_pairs`): candidates stay (id_a, id_b) through the
-    whole tail; both vectors are looked up in the broadcast per-length
-    matrices and scored with the bit-exact sequential fold. Pairs whose
-    side is missing/NULL drop (the join form's NULL cos); cross-length
-    pairs survive only via the zero-norm −1.0 guard."""
+def _lsh_verify_broadcast(df: DataFrame, id_col: str, vec_col: str, pre_thr: float):
+    """The ``mapInArrow`` function verifying ``(id_a, id_b)`` candidates
+    against a BROADCAST vector table (see :func:`lsh_near_dup_pairs`):
+    ``pc.index_in`` finds both ids in the broadcast ids (any id type) and
+    :func:`_pair_cos` scores them. Pairs whose side is missing or NULL drop
+    (the join form's NULL cos); cross-length pairs survive only via the
+    zero-norm −1.0 guard."""
     import numpy as np
 
-    from .dedup import _supersede_broadcast
-
-    spark = df.sparkSession
-    side = df.select(
-        F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    ).where(F.col("_v").isNotNull())
-    rows = side.collect()
-    by_len: dict = {}
-    for r in rows:
-        v = r["_v"]
-        by_len.setdefault(len(v), ([], []))
-        ids, vecs = by_len[len(v)]
-        ids.append(r["_id"])
-        vecs.append(v)
-    all_ids, all_norm, all_grp, all_row = [], [], [], []
-    groups = {}
-    for gi, (ln, (ids, vecs)) in enumerate(sorted(by_len.items())):
-        mat = np.array(vecs, dtype=np.float64)
-        if mat.ndim == 1:
-            mat = mat.reshape(len(vecs), 0)
-        groups[gi] = mat
-        nrm = _np_seq_norms(mat)
-        all_ids.extend(ids)
-        all_norm.extend(nrm)
-        all_grp.extend([gi] * len(ids))
-        all_row.extend(range(len(ids)))
-    all_ids = np.array(all_ids, dtype=np.int64)
-    order = np.argsort(all_ids, kind="stable")
-    lut = (
-        all_ids[order],
-        np.array(all_norm, dtype=np.float64)[order],
-        np.array(all_grp, dtype=np.int64)[order],
-        np.array(all_row, dtype=np.int64)[order],
-        groups,
-    )
-    bc = _supersede_broadcast(spark, f"lsh_vecs:{id_col}", lut)
+    bc = _broadcast_vectors(_vectors(df, id_col, vec_col), f"lsh_vecs:{id_col}")
 
     def verify(batches):
-        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        s_ids, s_norm, s_grp, s_row, mats = bc.value
+        ids, g = bc.value
 
-        def locate(ids):
-            pos = np.searchsorted(s_ids, ids)
-            pos = np.clip(pos, 0, len(s_ids) - 1)
-            found = (len(s_ids) > 0) & (s_ids[pos] == ids)
-            return pos, found
+        def locate(col):
+            hit = pc.index_in(col, value_set=ids)
+            return hit.fill_null(-1).to_numpy(zero_copy_only=False)
 
         for batch in batches:
-            ia = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            ib = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            n = len(ia)
-            if n == 0 or len(s_ids) == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0).take(pa.array([], type=pa.int64())),
-                        batch.column(1).take(pa.array([], type=pa.int64())),
-                        pa.array([], type=pa.float64()),
-                    ],
-                    names=["id_a", "id_b", "_rawcos"],
-                )
-                continue
-            pa_pos, fa = locate(ia)
-            pb_pos, fb = locate(ib)
-            ok = fa & fb
-            cos = np.full(n, np.nan)
-            ga, gb = s_grp[pa_pos], s_grp[pb_pos]
-            na, nb = s_norm[pa_pos], s_norm[pb_pos]
-            denom = na * nb
-            same = ok & (ga == gb)
-            for gi, mat in mats.items():
-                sel = np.nonzero(same & (ga == gi))[0]
-                if not len(sel):
-                    continue
-                A = mat[s_row[pa_pos[sel]]]
-                B = mat[s_row[pb_pos[sel]]]
-                acc = np.zeros(len(sel))
-                for j in range(mat.shape[1]):
-                    acc = acc + A[:, j] * B[:, j]
-                d = denom[sel]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos[sel] = np.where(
-                        d == 0.0, -1.0, acc / np.where(d == 0.0, 1.0, d)
-                    )
-            cross = ok & (ga != gb)
-            cos[cross] = np.where(denom[cross] == 0.0, -1.0, np.nan)
+            ia, ib = (locate(batch.column(i)) for i in (0, 1))
+            ok = np.nonzero((ia >= 0) & (ib >= 0))[0]
+            cos = _pair_cos(g, ia[ok], g, ib[ok])
             m = cos >= pre_thr
-            take = pa.array(np.nonzero(m)[0].astype(np.int64))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).take(take),
-                    batch.column(1).take(take),
-                    pa.array(cos[m].astype(np.float64)),
-                ],
-                names=["id_a", "id_b", "_rawcos"],
-            )
+            yield _pairs_batch(batch.column(0), ok[m], batch.column(1), ok[m], cos[m])
 
-    scored = cand.mapInArrow(verify, f"id_a {id_dt}, id_b {id_dt}, _rawcos double")
-    return scored.select(
-        "id_a", "id_b", F.round(F.col("_rawcos"), 6).alias("cos")
-    ).where(F.col("cos") >= threshold)
+    return verify
 
 
-def assign_cells(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list,
-    via: str = "join",
-) -> DataFrame:
-    """Nearest-centroid (cosine) assignment → ``(id_col, _cell)`` (0-based).
-
-    ``via="literal"`` embeds the k×dim centroid matrix as ONE plan literal
-    and argmaxes with higher-order functions — zero joins, but the literal
-    size and the interpreted k×dim FLOPs/row scale with k: the small-k path
-    (k ≲ 64). ``via="join"`` broadcasts a centroid TABLE and argmaxes with a
-    ``max(struct)`` aggregate (map-side partial, no window sort) — the
-    large-k path (the 10⁴–10⁵ cells a 100 TB IVF wants). Identical float
-    folds and identical tie-break (lowest cell wins) ⇒ identical assignments
-    (pytest-asserted at k=256). NULL vectors are dropped on BOTH paths (they
-    have no nearest cell; without the filter the literal path would emit a
-    NULL cell while the join path's max(struct) would fall through the NULL
-    sim to cell 0 — mode-dependent results).
-    """
-    cents = [[float(x) for x in c] for c in centroids]
-    vecs = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
-        .select(id_col, "_v", norm(F.col("_v")).alias("_vn"))  # norm hoisted once
-    )
-    if via == "literal":
-        cl = F.lit(cents)
-        # zero-norm guard: a zero vector (or zero centroid) gets similarity
-        # -1 instead of a divide-by-zero (ANSI mode aborts the job on x/0).
-        # Centroid norms are precomputed driver-side (Python doubles fold in
-        # the same IEEE order as the SQL aggregate — bit-identical) and
-        # zipped in as a literal: norm(p) inside the lambda would re-run the
-        # O(dim) fold per centroid per ROW, doubling the hot loop's FLOPs
-        sims = F.zip_with(
-            cl,
-            F.lit(_norms_py(cents)),
-            lambda p, pn: _safe_ratio(dot(F.col("_v"), p), F.col("_vn"), pn),
-        )
-        return vecs.select(
-            F.col(id_col),
-            (F.array_position(sims, F.array_max(sims)) - 1).cast("int").alias("_cell"),
-        )
-    cdf = df.sparkSession.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "_cell int, _cent array<double>"
-    ).withColumn("_cn", norm(F.col("_cent")))
-    scored = vecs.crossJoin(F.broadcast(cdf)).select(
-        F.col(id_col),
-        F.col("_cell"),
-        _safe_ratio(dot(F.col("_v"), F.col("_cent")), F.col("_vn"), F.col("_cn")).alias("_sim"),
-    )
-    # argmax via max(struct(sim, -cell)): same (max sim, lowest cell) winner
-    # as array_position-of-array_max on the literal path
-    return (
-        scored.groupBy(id_col)
-        .agg(F.max(F.struct(F.col("_sim").alias("s"), (-F.col("_cell")).alias("nc"))).alias("_b"))
-        .select(F.col(id_col), (-F.col("_b.nc")).cast("int").alias("_cell"))
-    )
-
+# --------------------------------------------------------------------- IVF
 
 def kmeans_centroids(
     df: DataFrame,
@@ -734,23 +480,20 @@ def kmeans_centroids(
     vec_col: str,
     k: int = 16,
     iters: int = 5,
-    assign: str = "auto",
 ) -> list:
     """Lloyd k-means centroids (cosine assignment, mean update) → a k×dim
     Python list for :func:`ivf_index`'s ``centroids`` parameter.
 
     Deterministic init: the k lowest-id vectors (same as the IVF default).
-    Each iteration is one assignment pass + one per-(cell, dim) mean; only
-    the k×dim centroid matrix ever reaches the driver. ``assign`` picks the
-    :func:`assign_cells` strategy: ``"auto"`` uses the plan-literal argmax up
-    to k=64 and the broadcast-join argmax beyond (the literal path's plan
-    size and per-row FLOPs grow with k — see :func:`assign_cells`). Empty
-    cells keep their previous centroid. float mean is aggregation-order
-    sensitive at the ulp level — consumers must not rely on bit-exact
-    centroids across cluster layouts (cell ASSIGNMENT ties are broken by
-    cell index, which is stable).
+    Each iteration is one :func:`_assign_carry` pass — the IVF's own cell
+    assignment, carrying the vector into the per-(cell, dim) mean — so only
+    the k×dim centroid matrix ever reaches the driver. Empty cells keep
+    their previous centroid. float mean is aggregation-order sensitive at
+    the ulp level — consumers must not rely on bit-exact centroids across
+    cluster layouts (cell ASSIGNMENT ties are broken by cell index, which is
+    stable).
     """
-    mode = assign if assign != "auto" else ("literal" if k <= 64 else "join")
+    spark = df.sparkSession
     init = (
         df.orderBy(id_col)
         .limit(k)
@@ -758,45 +501,19 @@ def kmeans_centroids(
         .collect()
     )
     cents = [list(r["v"]) for r in init]
-    vecs = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
-        .select(id_col, "_v", norm(F.col("_v")).alias("_vn"))
-    )
+    vecs = _vectors(df, id_col, vec_col)
     for _ in range(iters):
-        if mode == "literal":
-            # single narrow pass, ZERO joins: assignment expression inline,
-            # posexplode feeds the mean directly (the assign_cells+join-back
-            # form would add a full-data shuffle per iteration)
-            cl = F.lit(cents)
-            sims = F.zip_with(
-                cl,
-                F.lit(_norms_py(cents)),
-                lambda p, pn: _safe_ratio(dot(F.col("_v"), p), F.col("_vn"), pn),
-            )
-            cell = (F.array_position(sims, F.array_max(sims)) - 1).alias("_cell")
-            exploded = vecs.select(cell, F.posexplode("_v").alias("_pos", "_x"))
-        else:
-            # large k: broadcast-join max(struct) argmax CARRYING the vector
-            # (same aggregate as ivf_index) — one one-row-per-vector shuffle,
-            # no re-attach join per iteration
-            cdf = df.sparkSession.createDataFrame(
-                [(i, c) for i, c in enumerate(cents)],
-                "_cell int, _cent array<double>",
-            ).withColumn("_centn", norm(F.col("_cent")))
-            assigned = _argmax_carry(vecs, id_col, "_v", cdf, "_cell")
-            exploded = assigned.select(
-                "_cell", F.posexplode("_v").alias("_pos", "_x")
-            )
+        cdf = spark.createDataFrame(list(enumerate(cents)), "cell int, _cent array<double>")
         means = (
-            exploded.groupBy("_cell", "_pos").agg(F.avg("_x").alias("_m")).collect()
+            _assign_carry(vecs, "_id", "_v", cdf)
+            .select("cell", F.posexplode("_v").alias("_pos", "_x"))
+            .groupBy("cell", "_pos")
+            .agg(F.avg("_x").alias("_m"))
+            .collect()
         )
         new = [list(c) for c in cents]  # empty cells keep previous centroid
         for r in means:
-            new[r["_cell"]][r["_pos"]] = r["_m"]
+            new[r["cell"]][r["_pos"]] = r["_m"]
         cents = new
     return cents
 
@@ -805,7 +522,8 @@ def _argmax_carry(
     vecs: DataFrame, id_col: str, vec_col: str, cents: DataFrame, cell_col: str
 ) -> DataFrame:
     """Nearest-centroid argmax that CARRIES the vector through the aggregate
-    → ``(cell_col, id_col, vec_col)``.
+    → ``(cell_col, id_col, vec_col)`` — the JVM fallback of
+    :func:`_assign_carry`.
 
     ``vecs`` must have (id_col, vec_col, _vn) with norms pre-hoisted; ``cents``
     must have (cell_col, _cent, _centn). The broadcast cross join is narrow
@@ -816,8 +534,7 @@ def _argmax_carry(
     ``row_number`` sort (the round-3 scale-killer: at the 10⁴–10⁵ cells a
     100 TB IVF wants that was a 10⁴×-data sort-shuffle). The ordering struct
     (sim, -cell) is unique per cell within an id group, so ``max_by`` is
-    deterministic; tie-break identical to :func:`assign_cells`'s
-    ``max(struct)``: highest sim, then lowest cell (max of -cell). An
+    deterministic: highest sim, then lowest cell (max of -cell). An
     all-NULL-sim group (NULL vector) falls through to the lowest cell,
     matching the old window's NULLS LAST + asc(cell) ordering (the ordering
     struct itself is never NULL, so ``max_by`` skips no rows). Parity with
@@ -861,40 +578,31 @@ def ivf_index(
 
     Centroids are the ``n_cells`` lowest-id vectors (deterministic; swap in
     k-means centroids for production without changing the query path). The
-    assignment is a broadcast cross join + ``max_by`` argmax aggregate
-    (:func:`_argmax_carry`) — one scan, one one-row-per-vector shuffle, no
-    window sort; the index is written bucketed by ``cell`` at scale so probes
-    read only matching buckets.
+    assignment is :func:`_assign_carry` — one scan, one narrow Arrow map, no
+    window sort; the index is written partitioned by ``cell`` at scale so
+    probes read only matching partitions.
     """
-    cents_df = _cents_df(df, id_col, vec_col, n_cells, centroids)
-    out = _assign_carry_vectorized(df, id_col, vec_col, cents_df, "cell")
-    if out is not None:
-        return out
-    cents = cents_df.withColumn("_centn", norm(F.col("_cent")))
-    # vector norms once per row; centroid norms once per centroid — each of
-    # the n_cells assignment scores then costs a single dot fold
-    vecs = df.select(
-        F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_vn")
+    return _assign_carry(
+        df, id_col, vec_col, _cents_df(df, id_col, vec_col, n_cells, centroids)
     )
-    return _argmax_carry(vecs, id_col, vec_col, cents, "cell")
 
 
-def _assign_carry_vectorized(
-    df: DataFrame, id_col: str, vec_col: str, cents_df: DataFrame, cell_col: str
-) -> Optional[DataFrame]:
-    """Arrow/numpy rendition of :func:`_argmax_carry` → ``(cell, id, vec)``,
-    bit-identical to the ``max_by(struct)`` form (r7): the tiny centroid
-    table is collected and broadcast, and each task scores its batch with
-    the sequential per-dimension IEEE fold (the established bit-exact
-    replay of :func:`dot`/:func:`norm`), picking ``np.argmax`` per row —
-    first-max ties == the JVM's (max sim, lowest cell), NaN sims win on
-    both engines (Spark orders NaN above all doubles), and rows whose sims
-    are all NULL in the JVM form (NULL vector, NULL element, length
-    mismatch vs the centroid dim) fall to the lowest cell exactly like
-    ``max_by`` over an all-NULL ordering field. Returns ``None`` (caller
-    falls back to the JVM aggregate) for centroid tables the replay can't
-    guarantee — NULL/ragged centroid vectors. Replaces 320k interpreted
-    HOF folds at sf1.0 (~2.8 s → ~0.6 s for the index build).
+def _assign_carry(
+    df: DataFrame, id_col: str, vec_col: str, cents_df: DataFrame
+) -> DataFrame:
+    """Nearest-centroid (cosine) cell of every vector, carrying the vector →
+    ``(cell, id_col, vec_col)``; ``cents_df`` is ``(cell, _cent)``.
+
+    The tiny centroid table is collected and broadcast, and each task scores
+    its Arrow batch with :func:`_seq_cos` and picks ``np.argmax`` per row
+    (r7: replaced 320k interpreted HOF folds at sf1.0, ~2.8 s → ~0.6 s for
+    the index build). The result equals :func:`_argmax_carry`'s
+    ``max_by(struct)`` aggregate: first-max ties == (max sim, lowest cell);
+    NaN sims win on both engines (Spark orders NaN above all doubles); rows
+    whose sims are all NULL in the JVM form (NULL vector, NULL element,
+    length mismatch vs the centroid dim) fall to the lowest cell there, as
+    an all-NaN or unscored row does here. Centroid tables the replay can't
+    guarantee (NULL/ragged centroid vectors) take :func:`_argmax_carry`.
     """
     import numpy as np
     import pyarrow as pa
@@ -902,78 +610,47 @@ def _assign_carry_vectorized(
     from .dedup import _supersede_broadcast
 
     spark = df.sparkSession
-    rows = cents_df.collect()
-    if not rows:
-        return None
-    cents = sorted(
-        ((int(r["cell"]), r["_cent"]) for r in rows), key=lambda t: t[0]
-    )
+    cents = sorted((int(r["cell"]), r["_cent"]) for r in cents_df.collect())
     vec_lists = [c for _, c in cents]
-    if any(
-        v is None or any(x is None for x in v) for v in vec_lists
-    ) or len({len(v) for v in vec_lists}) != 1:
-        return None
-    cdim = len(vec_lists[0])
-    cmat = np.array([[float(x) for x in v] for v in vec_lists], dtype=np.float64)
-    cell_ids = np.array([c for c, _ in cents], dtype=np.int64)
-    cn = _np_seq_norms(cmat)
-    bc = _supersede_broadcast(spark, f"ivf_cents:{id_col}", (cell_ids, cmat, cn))
+    if (
+        not cents
+        or any(v is None or None in v for v in vec_lists)
+        or len({len(v) for v in vec_lists}) != 1
+    ):
+        vecs = df.select(
+            F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_vn")
+        )
+        centn = cents_df.withColumn("_centn", norm(F.col("_cent")))
+        return _argmax_carry(vecs, id_col, vec_col, centn, "cell")
+    cmat = np.array(vec_lists, dtype=np.float64)
+    cells = np.array([c for c, _ in cents], dtype=np.int32)
+    bc = _supersede_broadcast(
+        spark, f"ivf_cents:{id_col}", (cells, cmat, _np_seq_norms(cmat))
+    )
     id_dt = df.schema[id_col].dataType.simpleString()
     vec_dt = df.schema[vec_col].dataType.simpleString()
 
     def assign(batches):
-        cells_b, C, cnorm = bc.value
-        low = int(cells_b[0])
+        cells, C, cn = bc.value
         for batch in batches:
-            ids = batch.column(0)
-            vecs = batch.column(1)
-            n = len(ids)
-            if n == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([], type=pa.int32()), ids, vecs],
-                    names=[cell_col, "_id", "_vec"],
-                )
-                continue
-            vecs_c = (
-                vecs.combine_chunks() if isinstance(vecs, pa.ChunkedArray) else vecs
-            )
-            pyv = vecs_c.to_pylist()
-            out_cells = np.full(n, low, dtype=np.int64)
-            ok = np.array(
-                [
-                    v is not None and len(v) == C.shape[1] and not any(
-                        x is None for x in v
-                    )
-                    for v in pyv
-                ],
-                dtype=bool,
-            )
-            if ok.any():
-                V = np.array([pyv[i] for i in np.nonzero(ok)[0]], dtype=np.float64)
-                vn = _np_seq_norms(V)
-                acc = np.zeros((V.shape[0], C.shape[0]))
-                for j in range(C.shape[1]):
-                    acc = acc + V[:, j][:, None] * C[:, j][None, :]
-                denom = vn[:, None] * cnorm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = np.where(
-                        denom == 0.0, -1.0, acc / np.where(denom == 0.0, 1.0, denom)
-                    )
-                out_cells[np.nonzero(ok)[0]] = cells_b[np.argmax(sims, axis=1)]
+            ids, vecs = batch.column(0), batch.column(1)
+            g = _by_len(vecs)
+            out = np.full(len(ids), cells[0], dtype=np.int32)
+            if C.shape[1] in g.groups:
+                rows, V = g.groups[C.shape[1]]
+                sims = _seq_cos(V[:, None], C[None], g.norms[rows][:, None], cn[None])
+                out[rows] = cells[np.argmax(sims, axis=1)]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_cells.astype(np.int32)), ids, vecs_c],
-                names=[cell_col, "_id", "_vec"],
+                [pa.array(out), ids, vecs], names=["cell", "_id", "_vec"]
             )
 
     n_parts = max(spark.sparkContext.defaultParallelism, 1)
     staged = df.repartition(n_parts).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
     )
-    out = staged.mapInArrow(
-        assign, f"{cell_col} int, _id {id_dt}, _vec {vec_dt}"
-    )
+    out = staged.mapInArrow(assign, f"cell int, _id {id_dt}, _vec {vec_dt}")
     return out.select(
-        F.col(cell_col),
+        F.col("cell"),
         F.col("_id").alias(id_col),
         F.col("_vec").alias(vec_col),
     )
@@ -1004,6 +681,45 @@ def _cents_df(
     )
 
 
+def _ivf_probes(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """Each query's ``n_probe`` nearest cells → ``(query_id, _qv, _qn,
+    cell)``, from the query side ``(query_id, _qv, _qn)`` and the centroid
+    table ``(cell, _cent)``."""
+    wq = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("cell"))
+    return (
+        F.broadcast(q)
+        .crossJoin(F.broadcast(cents))
+        .select(
+            "query_id", "_qv", "_qn", "cell",
+            cosine(F.col("_qv"), F.col("_cent")).alias("_sim"),
+        )
+        .withColumn("_rk", F.row_number().over(wq))
+        .where(F.col("_rk") <= n_probe)
+        .select("query_id", "_qv", "_qn", "cell")
+    )
+
+
+def _score_probed(
+    probes: DataFrame, index: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact cosine of each probe's query against its cell's index rows,
+    best score per (query, neighbor) across probes, ranked → top-k."""
+    scored = (
+        probes.join(index.withColumn("_in", norm(F.col(vec_col))), "cell")
+        .where(F.col("query_id") != F.col(id_col))
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            F.round(
+                _safe_ratio(dot(F.col("_qv"), F.col(vec_col)), F.col("_qn"), F.col("_in")), 6
+            ).alias("cos"),
+        )
+        .groupBy("query_id", "neighbor_id")  # a neighbor may match via several probes
+        .agg(F.max("cos").alias("cos"))
+    )
+    return _rank_topk(scored, k)
+
+
 def ivf_topk(
     df: DataFrame,
     id_col: str,
@@ -1022,43 +738,10 @@ def ivf_topk(
     ``n_probe/n_cells`` fraction of the scan — the 100 TB path where cells
     are storage buckets and unprobed buckets are never read.
     """
-    index = ivf_index(df, id_col, vec_col, n_cells, centroids).withColumn(
-        "_in", norm(F.col(vec_col))
-    )
+    index = ivf_index(df, id_col, vec_col, n_cells, centroids)
     cents = _cents_df(df, id_col, vec_col, n_cells, centroids)
-    q = df.where(F.col(id_col).isin(*list(query_ids))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("cell"))
-    probes = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select("query_id", "_qv", "_qn", "cell", cosine(F.col("_qv"), F.col("_cent")).alias("_sim"))
-        .withColumn("_rk", F.row_number().over(wq))
-        .where(F.col("_rk") <= n_probe)
-        .select("query_id", "_qv", "_qn", "cell")
-    )
-    scored = (
-        probes.join(index, "cell")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                _safe_ratio(dot(F.col("_qv"), F.col(vec_col)), F.col("_qn"), F.col("_in")), 6
-            ).alias("cos"),
-        )
-        .groupBy("query_id", "neighbor_id")  # a neighbor may match via several probes
-        .agg(F.max("cos").alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    q = _queries(df.where(F.col(id_col).isin(*list(query_ids))), id_col, vec_col)
+    return _score_probed(_ivf_probes(q, cents, n_probe), index, id_col, vec_col, k)
 
 
 def write_ivf_index(
@@ -1121,12 +804,10 @@ def _stored_query_lookup(
         )
     home_cells = sorted({r["cell"] for r in home})
     index = spark.read.parquet(path)
-    return index.where(
-        F.col("cell").isin(home_cells) & F.col(id_col).isin(*qids)
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
+    return _queries(
+        index.where(F.col("cell").isin(home_cells) & F.col(id_col).isin(*qids)),
+        id_col,
+        vec_col,
     )
 
 
@@ -1160,51 +841,26 @@ def ivf_topk_stored(
     index = spark.read.parquet(path)
     cents = spark.read.parquet(f"{path}/_centroids")
     if query_vectors is not None:
-        q = spark.createDataFrame(
-            [(int(i), [float(x) for x in v]) for i, v in query_vectors],
-            "query_id long, _qv array<double>",
-        ).select("query_id", "_qv", norm(F.col("_qv")).alias("_qn"))
+        q = _queries(
+            spark.createDataFrame(
+                [(int(i), [float(x) for x in v]) for i, v in query_vectors],
+                "query_id long, _qv array<double>",
+            ),
+            "query_id",
+            "_qv",
+        )
     else:
         q = _stored_query_lookup(spark, path, id_col, vec_col, query_ids)
-    wq = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("cell"))
-    probes_plan = (
-        F.broadcast(q)
-        .crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "_qv", "_qn", "cell",
-            cosine(F.col("_qv"), F.col("_cent")).alias("_sim"),
-        )
-        .withColumn("_rk", F.row_number().over(wq))
-        .where(F.col("_rk") <= n_probe)
-        .select("query_id", "_qv", "_qn", "cell")
-    )
+    probes_plan = _ivf_probes(q, cents, n_probe)
     probe_rows = probes_plan.collect()  # tiny; evaluated exactly once
     probes = spark.createDataFrame(probe_rows, probes_plan.schema)
     cells = sorted({r["cell"] for r in probe_rows})
-    pruned = index.where(F.col("cell").isin(cells)).withColumn(
-        "_in", norm(F.col(vec_col))
-    )
-    scored = (
-        F.broadcast(probes)
-        .join(pruned, "cell")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                _safe_ratio(dot(F.col("_qv"), F.col(vec_col)), F.col("_qn"), F.col("_in")), 6
-            ).alias("cos"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
+    return _score_probed(
+        F.broadcast(probes), index.where(F.col("cell").isin(cells)), id_col, vec_col, k
     )
 
+
+# ---------------------------------------------------------------- sign-LSH
 
 def _plane_sign(p: int, j: int, seed: int) -> float:
     """±1 for plane p, component j — md5-derived: deterministic across runs,
@@ -1311,9 +967,4 @@ def lsh_topk(
             F.round(cosine(F.col("_qv"), F.col("_cv")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    return _rank_topk(scored, k)

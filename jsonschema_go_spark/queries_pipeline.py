@@ -349,9 +349,7 @@ def q_dedup_corpus_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the eager checkpoint above re-materialized the labels, so the CC
     # run's converged edge set (when the distributed path produced one)
     # has no remaining reader — release it now, not at session end
-    if dd._LAST_EDGES is not None and dd._LAST_EDGES.sparkSession is spark:
-        dd._release_checkpoint(dd._LAST_EDGES)
-        dd._LAST_EDGES = None
+    dd._park_edges(None, spark)
     if (
         _E2E_LAST_CLUSTERS is not None
         and _E2E_LAST_CLUSTERS.sparkSession is spark

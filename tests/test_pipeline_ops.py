@@ -10,15 +10,16 @@ from pyspark.sql import functions as F
 
 from jsonschema_go_spark.operators import dedup as dd
 from jsonschema_go_spark.operators import multimodal as mm
-from jsonschema_go_spark.operators import similarity as sim
 from jsonschema_go_spark.operators import text as tx
+from tests import reference_forms as rf
+from tests.conftest import SF_DIR
 
 
 def test_word_shingles_edges(spark):
     df = spark.createDataFrame(
         [("a b c d",), ("a b",), ("",), ("  x   y  z ",)], "t string"
     )
-    rows = df.select(dd.word_shingles(F.col("t"), 3).alias("s")).collect()
+    rows = df.select(rf.word_shingles(F.col("t"), 3).alias("s")).collect()
     assert rows[0]["s"] == ["a b c", "b c d"]
     assert rows[1]["s"] == []  # fewer words than n
     assert rows[2]["s"] == []
@@ -79,27 +80,6 @@ def test_exact_duplicates_normalized(spark):
     assert len(groups) == 1 and groups[0]["dup_count"] == 2
 
 
-def test_cosine_self_similarity(spark):
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [-1.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    )
-    tk = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-          for r in sim.cosine_topk(df, "vec_id", "embedding", [0], k=3).collect()}
-    assert tk[(0, 1)] == (1, 1.0)       # identical vector first
-    assert tk[(0, 2)][1] == 0.0          # orthogonal
-    assert tk[(0, 3)] == (3, -1.0)       # opposite last
-
-
-def test_lsh_bucket_deterministic(spark):
-    df = spark.createDataFrame(
-        [(0, [1.0, 2.0, 3.0, 4.0])], "vec_id long, embedding array<float>"
-    )
-    b1 = df.select(sim.sign_lsh_bucket(F.col("embedding"), 4, planes=8).alias("b")).first()["b"]
-    b2 = df.select(sim.sign_lsh_bucket(F.col("embedding"), 4, planes=8).alias("b")).first()["b"]
-    assert b1 == b2 and len(b1) == 8 and set(b1) <= {"0", "1"}
-
-
 def test_multimodal_plumbing(spark):
     docs = spark.createDataFrame(
         [(1, "hello"), (2, "world"), (3, None)], "doc_id long, text string"
@@ -129,98 +109,6 @@ def test_quality_score_bounds(spark):
     rows = tx.quality_features(df).select("quality_score").collect()
     assert all(0.0 <= r["quality_score"] <= 1.0 for r in rows)
     assert rows[0]["quality_score"] > rows[1]["quality_score"]
-
-
-def test_ivf_exhaustive_equals_brute_force(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qids = [0, 100, 200]
-    brute = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-             for r in sim.cosine_topk(emb, "vec_id", "embedding", qids, k=5).collect()}
-    ivf_all = {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-               for r in sim.ivf_topk(emb, "vec_id", "embedding", qids, k=5,
-                                     n_cells=8, n_probe=8).collect()}
-    assert ivf_all == brute
-
-
-def test_ivf_probed_subset(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = sim.ivf_topk(emb, "vec_id", "embedding", [0, 100], k=5,
-                       n_cells=8, n_probe=2).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["query_id"], []).append(r)
-    for q, rows in per_q.items():
-        assert len(rows) <= 5
-        ranks = sorted(r["rank"] for r in rows)
-        assert ranks == list(range(1, len(rows) + 1))
-        cs = [r["cos"] for r in sorted(rows, key=lambda r: r["rank"])]
-        assert cs == sorted(cs, reverse=True)
-
-
-def test_ivf_index_partitions_all_vectors(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx = sim.ivf_index(emb, "vec_id", "embedding", n_cells=8)
-    assert idx.count() == emb.count()          # every vector in exactly one cell
-    assert idx.select("vec_id").distinct().count() == emb.count()
-    assert idx.select("cell").distinct().count() == 8
-
-
-def test_lsh_near_dup_hot_bucket_cap(spark):
-    """max_bucket_freq drops band-buckets larger than the cap (the LSH
-    stop-shingle guard): identical vectors all land in one bucket per band,
-    so a cap below the cluster size suppresses their pairs; without the cap
-    the pairs are found and exact-verified."""
-    rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(20)]  # one hot cluster
-    rows += [(100, [-1.0, 5.0, -3.0, 2.0]), (101, [-1.0, 5.0, -3.0, 2.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    uncapped = sim.lsh_near_dup_pairs(
-        df, "vec_id", "embedding", dim=4, threshold=0.99, bands=4, rows_per_band=4
-    )
-    # 20-cluster all-pairs (190) + the small pair
-    assert uncapped.count() == 190 + 1
-
-    capped = sim.lsh_near_dup_pairs(
-        df, "vec_id", "embedding", dim=4, threshold=0.99,
-        bands=4, rows_per_band=4, max_bucket_freq=5,
-    )
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert (100, 101) in got          # small bucket survives the cap
-    assert len(got) == 1              # hot-cluster pairs suppressed
-
-
-def test_kmeans_centroids_and_ivf_exhaustive_equivalence(spark):
-    """k-means centroids are a drop-in for the IVF cell layout: with
-    exhaustive probes the results STILL equal brute force regardless of the
-    centroid quality (cells only partition the search space)."""
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = sim.kmeans_centroids(df, "vec_id", "embedding", k=8, iters=3)
-    assert len(cents) == 8 and all(len(c) == 64 for c in cents)
-
-    qids = [0, 50, 100]
-    brute = sim.cosine_topk(df, "vec_id", "embedding", qids, k=5)
-    ivf_km = sim.ivf_topk(
-        df, "vec_id", "embedding", qids, k=5, n_cells=8, n_probe=8, centroids=cents
-    )
-    a = sorted(tuple(r) for r in brute.collect())
-    b = sorted(tuple(r) for r in ivf_km.collect())
-    assert a == b
-
-    # probe-limited k-means cells remain a valid (subset) search
-    part = sim.ivf_topk(
-        df, "vec_id", "embedding", qids, k=5, n_cells=8, n_probe=2, centroids=cents
-    )
-    got = {(r["query_id"], r["neighbor_id"]) for r in part.collect()}
-    assert got and got.issubset({(x[0], x[1]) for x in a} | got)
-
-
-def test_kmeans_survives_zero_vector(spark):
-    """Review finding: cosine assignment divided by zero on a zero-norm
-    vector (job abort under ANSI). Zero vectors now score -1 everywhere."""
-    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 1.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = sim.kmeans_centroids(df, "vec_id", "embedding", k=2, iters=2)
-    assert len(cents) == 2 and all(len(c) == 2 for c in cents)
 
 
 def test_multimodal_resize_and_frame_sample(spark):
@@ -329,73 +217,59 @@ def test_duplicate_clusters_and_keep_list(spark):
     assert kept == [0, 1, 2, 4, 6]  # survivors + singletons; 3,5,7 dropped
 
 
-# --------------------------------------------- k-means large-k assignment
-
-def test_assign_cells_join_matches_literal_k256(spark):
-    """The broadcast-join argmax (large-k path) must produce the SAME cell
-    assignment as the plan-literal argmax for identical centroids — k=256 is
-    past the literal path's documented ceiling (auto switches at 64)."""
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = [
-        [
-            (int(hashlib.md5(f"{c}:{j}".encode()).hexdigest(), 16) % 2001 - 1000)
-            / 1000.0
-            for j in range(64)
-        ]
-        for c in range(256)
-    ]
-    lit = {
-        r["vec_id"]: r["_cell"]
-        for r in sim.assign_cells(df, "vec_id", "embedding", cents, via="literal").collect()
-    }
-    join = {
-        r["vec_id"]: r["_cell"]
-        for r in sim.assign_cells(df, "vec_id", "embedding", cents, via="join").collect()
-    }
-    assert len(lit) == 500
-    assert lit == join
-
-
-def test_kmeans_join_mode_matches_literal(spark):
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").where(
-        F.col("vec_id") < 200
+def test_connected_components_local_finish_releases_prior_edges(spark):
+    """A distributed run parks its converged edge set in ``_LAST_EDGES``; a
+    later local-finish run supersedes it and must release it, not just drop
+    the only handle (which pinned it until session end)."""
+    jsc = spark.sparkContext._jsc.sc()
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "id_a long, id_b long"
     )
-    a = sim.kmeans_centroids(df, "vec_id", "embedding", k=8, iters=2, assign="literal")
-    b = sim.kmeans_centroids(df, "vec_id", "embedding", k=8, iters=2, assign="join")
-    assert len(a) == len(b) == 8
-    for ca, cb in zip(a, b):
-        for x, y in zip(ca, cb):
-            assert abs(x - y) < 1e-9  # same assignments; means ulp-comparable
+    dd.connected_components(chain).collect()  # local finish: nothing parked
+    start = jsc.getPersistentRDDs().size()
+    dd.connected_components(chain, local_finish_threshold=0).collect()
+    assert jsc.getPersistentRDDs().size() == start + 1  # the parked edge set
+    dd.connected_components(chain).collect()
+    assert jsc.getPersistentRDDs().size() == start
 
 
-# ------------------------------------------------ stored IVF index pruning
+# ------------------------------------------------------------ id types
 
-def test_stored_ivf_matches_in_memory_and_prunes(spark, tmp_path):
-    """write_ivf_index + ivf_topk_stored: results equal the in-memory ivf_topk
-    for the same centroid layout, AND the scoring scan is partition-pruned to
-    the probed cells (the plan carries a cell IN (...) PartitionFilter)."""
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    qids = [0, 100, 200]
-    sim.write_ivf_index(df, "vec_id", "embedding", path, n_cells=8)
+#: id column recasts whose order matches the int ids, and their inverse
+_ID_KINDS = {
+    "string": (lambda c: F.format_string("d%08d", c), lambda v: int(v[1:])),
+    "decimal": (lambda c: c.cast("decimal(12,0)"), int),
+}
 
-    got = sim.ivf_topk_stored(spark, path, "vec_id", "embedding", qids, k=5, n_probe=2)
-    want = sim.ivf_topk(df, "vec_id", "embedding", qids, k=5, n_cells=8, n_probe=2)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
-    # plan-level pruning evidence: the index scan filters on the partition
-    # column, so unprobed cell directories are never read
-    index = spark.read.parquet(path)
-    probe_cells = [1, 3]
-    pruned = index.where(F.col("cell").isin(probe_cells))
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters", 1)[1][:200]
-    # and the files ACTUALLY read (runtime truth) are only the probed cells'
-    read_files = {
-        r[0] for r in pruned.select(F.input_file_name()).distinct().collect()
-    }
-    all_files = {
-        r[0] for r in index.select(F.input_file_name()).distinct().collect()
-    }
-    assert read_files < all_files
-    assert all(any(f"cell={c}/" in f for c in probe_cells) for f in read_files)
+@pytest.mark.parametrize("kind", sorted(_ID_KINDS))
+def test_dedup_kernels_pass_any_id_type(spark, kind):
+    """The Arrow signature kernels carry ids as payload: on string and
+    decimal ids, minhash/simhash signatures and the candidate/near pairs
+    equal the int-id run with ids mapped, and keep the input id type."""
+    to_id, back = _ID_KINDS[kind]
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    base = docs.select("doc_id", "text")
+    dups = base.where(F.col("doc_id") % 10 == 0).withColumn(
+        "doc_id", F.col("doc_id") + 100_000
+    )
+    corpus = base.unionByName(dups)
+    recast = corpus.select(to_id(F.col("doc_id")).alias("doc_id"), "text")
+    id_type = recast.schema["doc_id"].dataType
+
+    def same(op, *args):
+        want = sorted(tuple(r) for r in op(corpus, "doc_id", "text", *args).collect())
+        out = op(recast, "doc_id", "text", *args)
+        ids = [c for c in out.columns if c in ("doc_id", "id_a", "id_b")]
+        assert all(out.schema[c].dataType == id_type for c in ids), op.__name__
+        got = sorted(
+            tuple(back(r[c]) if c in ids else r[c] for c in out.columns)
+            for r in out.collect()
+        )
+        assert got == want, op.__name__
+        return want
+
+    same(dd.minhash_table)
+    same(dd.simhash64)
+    assert same(dd.lsh_candidate_pairs)
+    assert same(dd.simhash_near_pairs, 3)

@@ -4,8 +4,8 @@
    (const/enum/default, a property literally named "$ref") pass verbatim;
 2. staged-table resume is path-scoped — same run_id + different base_path
    never resumes against the other run's staged table;
-3. sign-LSH signatures tolerate NULL embedding vectors (parity with the
-   exact path, which drops null-cos pairs);
+3. sign-LSH signatures tolerate NULL embedding vectors (now in
+   ``test_similarity.py``);
 4. stateful_contiguity_stream derives the key field type from the input
    schema (non-string conversation keys);
 5. runner row totals take the LATEST lineage attempt per bucket.
@@ -109,57 +109,6 @@ def test_staged_table_name_is_path_scoped(spark, tmp_path):
     assert staged_b.count() == 10
     spark.sql(f"DROP TABLE IF EXISTS {run_a._staged_table}")
     spark.sql(f"DROP TABLE IF EXISTS {run_b._staged_table}")
-
-
-# ------------------------------------------------- 3. null-safe LSH vectors
-
-def test_lsh_near_dup_pairs_tolerates_null_vectors(spark):
-    from jsonschema_go_spark.operators import similarity as sim
-
-    rows = [
-        (0, [1.0] * 8),
-        (1, [1.0] * 8),       # exact dup of 0
-        (2, None),             # null vector: must not crash the Arrow batch
-        (3, [-1.0] * 8),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    got = sim.lsh_near_dup_pairs(
-        df, "vec_id", "embedding", dim=8, threshold=0.9, bands=4, rows_per_band=4
-    )
-    pairs = {(r["id_a"], r["id_b"]) for r in got.collect()}
-    assert pairs == {(0, 1)}
-    # parity: the exact path on the same corpus yields the same pairs
-    exact = sim.embedding_near_dup_pairs(df, "vec_id", "embedding", threshold=0.9)
-    assert {(r["id_a"], r["id_b"]) for r in exact.collect()} == pairs
-
-
-def test_exact_neardup_samples_both_sides(spark):
-    """The audit path's cartesian must be bounded: BOTH sides restricted to
-    the deterministic sample (no gated query ships a sample × full-corpus
-    cartesian)."""
-    from jsonschema_go_spark.operators import similarity as sim
-
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = sim.embedding_near_dup_pairs(
-        df, "vec_id", "embedding", threshold=0.0, sample_mod=4
-    )
-    rows = out.collect()
-    assert rows, "sampled audit produced no pairs at threshold 0"
-    assert all(r["id_a"] % 4 == 0 and r["id_b"] % 4 == 0 for r in rows)
-    # r7: the sampled path is the broadcast+mapInArrow vectorized form —
-    # pin it bit-for-bit against the ground-truth cartesian (sample_mod=None
-    # on the pre-filtered sample), which is strictly stronger than the old
-    # plan-string check that both join inputs were sampled
-    truth = sim.embedding_near_dup_pairs(
-        df.where(F.col("vec_id") % 4 == 0), "vec_id", "embedding",
-        threshold=0.0, sample_mod=None,
-    ).collect()
-    assert {(r["id_a"], r["id_b"], r["cos"]) for r in rows} == {
-        (r["id_a"], r["id_b"], r["cos"]) for r in truth
-    }
 
 
 # --------------------------------------- 4. streaming non-string conv keys

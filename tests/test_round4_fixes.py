@@ -1,92 +1,18 @@
 """Round-4 fixes (VERDICT.md r3 "Next round" items 1, 3, 6):
 
-1. `ivf_index` builds cell assignment with the max_by join-argmax aggregate
-   instead of the crossJoin + row_number window — parity with the window
-   reference at n_cells ∈ {16, 256}, and a plan assertion that the build has
-   no Window and a map-side partial aggregate before the exchange.
+1. `ivf_index` builds cell assignment without the crossJoin + row_number
+   window (now in ``test_similarity.py``).
 3. `connected_components` fuses the convergence statistic into the
    checkpoint pass — one driver-blocking action per star-round.
 6. `ivf_topk_stored` resolves query-by-id vectors through the `_ids/`
-   sidecar — both lookup modes physically read only probed/home cells.
+   sidecar (now in ``test_similarity.py``).
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from jsonschema_go_spark.operators import dedup as dd
-from jsonschema_go_spark.operators import similarity as sim
-
-
-def _ivf_index_window_reference(df, id_col, vec_col, n_cells, centroids=None):
-    """The round-3 implementation, kept as the semantic reference: broadcast
-    crossJoin + row_number window argmax (desc sim, asc cell)."""
-    cents = sim._cents_df(df, id_col, vec_col, n_cells, centroids).withColumn(
-        "_centn", sim.norm(F.col("_cent"))
-    )
-    scored = (
-        df.select(F.col(id_col), F.col(vec_col), sim.norm(F.col(vec_col)).alias("_vn"))
-        .crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.col("cell"),
-            sim._safe_ratio(
-                sim.dot(F.col(vec_col), F.col("_cent")), F.col("_vn"), F.col("_centn")
-            ).alias("_sim"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("_sim"), F.asc("cell"))
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select("cell", F.col(id_col), F.col(vec_col))
-    )
-
-
-@pytest.mark.parametrize("n_cells", [16, 256])
-def test_ivf_index_argmax_matches_window_reference(spark, n_cells):
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    want = {
-        (r["vec_id"], r["cell"])
-        for r in _ivf_index_window_reference(df, "vec_id", "embedding", n_cells).collect()
-    }
-    got_rows = sim.ivf_index(df, "vec_id", "embedding", n_cells).collect()
-    got = {(r["vec_id"], r["cell"]) for r in got_rows}
-    assert len(got_rows) == df.count()  # every vector assigned exactly once
-    assert got == want
-    # the carried vector is the original one
-    vecs = {r["vec_id"]: list(r["embedding"]) for r in df.collect()}
-    for r in got_rows[:20]:
-        assert list(r["embedding"]) == vecs[r["vec_id"]]
-
-
-def test_ivf_index_build_plan_no_window(spark):
-    """Scale shape of the index build: with explicit centroids the plan has
-    NO Window (no per-id sort-rank of n_cells vector copies). r7: the
-    default path is the broadcast-centroid Arrow argmax map (no aggregate
-    at all); the JVM max_by fallback (taken for centroid tables the numpy
-    replay can't guarantee, here a NULL element) must still run its argmax
-    as a map-side partial aggregate BEFORE the exchange."""
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = [[float((c * 64 + j) % 7 - 3) for j in range(64)] for c in range(16)]
-    idx = sim.ivf_index(df, "vec_id", "embedding", centroids=cents)
-    plan = idx._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "MapInArrow" in plan or "ArrowEval" in plan  # vectorized default
-    # JVM fallback: a default centroid table whose vectors carry a NULL
-    # element (the numpy replay declines) → partial max_by before exchange
-    rows = [(0, [None] + [1.0] * 7), (1, [0.5] * 8), (2, [1.0] * 8), (3, [-1.0] * 8)]
-    df2 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx2 = sim.ivf_index(df2, "vec_id", "embedding", n_cells=2)
-    plan2 = idx2._jdf.queryExecution().executedPlan().toString()
-    # (the default _cents_df numbers its <= n_cells seed rows with a tiny
-    # row_number window — pre-existing; the ARGMAX itself must stay a
-    # map-side partial max_by before the exchange, never a window sort)
-    assert "partial_max_by" in plan2
-    assert plan2.index("Exchange") < plan2.index("partial_max_by")
 
 
 def test_connected_components_one_action_per_round(spark):
@@ -233,51 +159,3 @@ def test_stage_transcripts_atomic_and_derived_dir(spark):
     assert not os.path.exists(f"{path}/garbage.parquet")
 
 
-def test_stored_ivf_ids_sidecar_prunes_both_lookup_modes(spark, tmp_path):
-    """`_ids/` sidecar: query-by-id lookup reads ONLY the queries' home-cell
-    partitions (plus the tiny sidecar), and results equal both the
-    query_vectors mode and the in-memory ivf_topk."""
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    qids = [0, 100, 200]
-    sim.write_ivf_index(df, "vec_id", "embedding", path, n_cells=8)
-
-    # by-id lookup goes through the sidecar and must read a strict subset of
-    # the index files, all from the queries' home cells
-    lookup = sim._stored_query_lookup(spark, path, "vec_id", "embedding", qids)
-    assert lookup.count() == len(qids)
-    ids = spark.read.parquet(f"{path}/_ids")
-    home_cells = {
-        r["cell"] for r in ids.where(F.col("vec_id").isin(qids)).collect()
-    }
-    lookup_files = {
-        r[0] for r in lookup.select(F.input_file_name()).distinct().collect()
-    }
-    index = spark.read.parquet(path)
-    all_files = {
-        r[0] for r in index.select(F.input_file_name()).distinct().collect()
-    }
-    assert lookup_files < all_files
-    assert all(
-        any(f"cell={c}/" in f for c in home_cells) for f in lookup_files
-    )
-    plan = lookup._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-
-    # result parity: by-id == by-vector == in-memory
-    by_id = sim.ivf_topk_stored(
-        spark, path, "vec_id", "embedding", qids, k=5, n_probe=2
-    )
-    qvecs = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in df.where(F.col("vec_id").isin(qids)).collect()
-    ]
-    by_vec = sim.ivf_topk_stored(
-        spark, path, "vec_id", "embedding", qids, k=5, n_probe=2,
-        query_vectors=qvecs,
-    )
-    want = sim.ivf_topk(df, "vec_id", "embedding", qids, k=5, n_cells=8, n_probe=2)
-    a = sorted(map(tuple, by_id.collect()))
-    b = sorted(map(tuple, by_vec.collect()))
-    c = sorted(map(tuple, want.collect()))
-    assert a == b == c

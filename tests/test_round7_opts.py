@@ -4,91 +4,9 @@ ground-truth equivalent) on adversarial fixtures."""
 
 from __future__ import annotations
 
-import struct
-
-import pytest
 from pyspark.sql import functions as F
 
-from jsonschema_go_spark.operators import similarity as sim
-
-
-def _legacy_sampled_pairs(df, id_col, vec_col, threshold, sample_mod):
-    """The round-6 form of the sampled audit: cartesian of the sample with
-    the interpreted zip_with+aggregate fold — the ground truth the
-    vectorized path must reproduce bit-for-bit."""
-    base = df.where(F.col(id_col) % sample_mod == 0)
-    a = base.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        sim.norm(F.col(vec_col)).alias("_na"),
-    )
-    b = base.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        sim.norm(F.col(vec_col)).alias("_nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                sim._safe_ratio(
-                    sim.dot(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
-                ),
-                6,
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-    )
-
-
-def _pairs_bits(df):
-    return {
-        (r["id_a"], r["id_b"]): struct.pack("<d", r["cos"]) for r in df.collect()
-    }
-
-
-def test_vectorized_neardup_bitexact_on_real_data(spark):
-    """sf0.001 embeddings, two thresholds: the vectorized sampled path must
-    emit the identical pair set with bit-identical rounded cosines."""
-    df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    for thr in (0.3, 0.0):
-        old = _pairs_bits(_legacy_sampled_pairs(df, "vec_id", "embedding", thr, 4))
-        new = _pairs_bits(
-            sim.embedding_near_dup_pairs(
-                df, "vec_id", "embedding", threshold=thr, sample_mod=4
-            )
-        )
-        assert old == new
-
-
-@pytest.mark.parametrize("thr", [0.0, 0.9, -1.0, -2.0])
-def test_vectorized_neardup_bitexact_adversarial(spark, thr):
-    """Adversarial vector shapes: NULL vector, NULL element (NaN norm),
-    all-zero vector (zero-norm guard), ragged lengths (cross-length pairs
-    only survive via the zero-norm guard), empty vectors."""
-    rows = [
-        (0, [1.0] * 8),
-        (4, [1.0] * 8),
-        (8, None),
-        (12, [0.0] * 8),
-        (16, [1.0, None] + [2.0] * 6),
-        (20, [1.0] * 4),
-        (24, [1.0] * 4),
-        (28, []),
-        (32, []),
-        (3, [9.9] * 8),
-    ]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    old = _pairs_bits(_legacy_sampled_pairs(df, "vec_id", "embedding", thr, 4))
-    new = _pairs_bits(
-        sim.embedding_near_dup_pairs(
-            df, "vec_id", "embedding", threshold=thr, sample_mod=4
-        )
-    )
-    assert old == new
+from tests import reference_forms as rf
 
 
 def test_minhash_arrow_bitexact_vs_agg_form(spark):
@@ -99,7 +17,7 @@ def test_minhash_arrow_bitexact_vs_agg_form(spark):
     from jsonschema_go_spark.operators import dedup as dd
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    old = dd._minhash_table_agg(docs, "doc_id", "text", 12, 3)
+    old = rf.minhash_table_agg(docs, "doc_id", "text", 12, 3)
     new = dd.minhash_table(docs, "doc_id", "text", 12, 3)
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
 
@@ -116,7 +34,7 @@ def test_minhash_arrow_bitexact_vs_agg_form(spark):
         (10, "  leading and trailing  "),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    old = dd._minhash_table_agg(df, "doc_id", "text", 12, 3)
+    old = rf.minhash_table_agg(df, "doc_id", "text", 12, 3)
     new = dd.minhash_table(df, "doc_id", "text", 12, 3)
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
     assert old.schema.simpleString() == new.schema.simpleString()
@@ -155,8 +73,8 @@ def test_simhash_pairs_bitcount_matches_digit_form(spark):
         )
         ham = None
         for pos in range(16):
-            da = dd._hex_digit_val(F.col("sig_a"), pos)
-            db = dd._hex_digit_val(F.col("sig_b"), pos)
+            da = rf.hex_digit_val(F.col("sig_a"), pos)
+            db = rf.hex_digit_val(F.col("sig_b"), pos)
             for shift in (8, 4, 2, 1):
                 term = ((F.floor(da / shift) % 2) != (F.floor(db / shift) % 2)).cast("int")
                 ham = term if ham is None else (ham + term)
@@ -284,7 +202,7 @@ def test_simhash64_arrow_bitexact_vs_agg_form(spark):
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").where(
         F.col("doc_id") % 7 == 0
     )
-    old = dd._simhash64_agg(docs, "doc_id", "text")
+    old = rf.simhash64_agg(docs, "doc_id", "text")
     new = dd.simhash64(docs, "doc_id", "text")
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
 
@@ -294,86 +212,10 @@ def test_simhash64_arrow_bitexact_vs_agg_form(spark):
         (8, "tab\tsep"),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    old = dd._simhash64_agg(df, "doc_id", "text")
+    old = rf.simhash64_agg(df, "doc_id", "text")
     new = dd.simhash64(df, "doc_id", "text")
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
     assert old.schema.simpleString() == new.schema.simpleString()
-
-
-def test_ivf_assignment_vectorized_matches_argmax_carry(spark):
-    """The Arrow/numpy cell assignment must equal the max_by(struct) JVM
-    aggregate — real data plus NULL-vector / NULL-element / ragged /
-    all-NaN / zero-norm adversarial vectors (NULL-sim fall-through to the
-    lowest cell, NaN-wins, lowest-cell tie-breaks)."""
-    from pyspark.sql import functions as F
-
-    from jsonschema_go_spark.operators import similarity as sim
-
-    def old_index(df, id_col, vec_col, n_cells=16, centroids=None):
-        cents = sim._cents_df(df, id_col, vec_col, n_cells, centroids).withColumn(
-            "_centn", sim.norm(F.col("_cent"))
-        )
-        vecs = df.select(
-            F.col(id_col), F.col(vec_col), sim.norm(F.col(vec_col)).alias("_vn")
-        )
-        return sim._argmax_carry(vecs, id_col, vec_col, cents, "cell")
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    o = old_index(emb, "vec_id", "embedding")
-    n = sim.ivf_index(emb, "vec_id", "embedding")
-    assert o.schema.simpleString() == n.schema.simpleString()
-    assert o.exceptAll(n).count() == 0 and n.exceptAll(o).count() == 0
-
-    rows = [
-        (0, [1.0] * 8), (1, None), (2, [1.0, None] + [0.5] * 6),
-        (3, [1.0] * 4), (4, [0.0] * 8), (5, [float("nan")] * 8),
-        (6, [-1.0] * 8), (7, [0.5] * 8),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [[1.0] * 8, [0.5] * 8, [-1.0] * 8]
-    om = {r["vec_id"]: r["cell"] for r in old_index(df, "vec_id", "embedding", centroids=cents).collect()}
-    nm = {r["vec_id"]: r["cell"] for r in sim.ivf_index(df, "vec_id", "embedding", centroids=cents).collect()}
-    assert om == nm
-
-
-def test_lsh_neardup_broadcast_verify_matches_join_form(spark):
-    """The broadcast-lookup candidate verification must equal the
-    join-attached form (forced via max_broadcast_vectors=0) — pairs AND
-    rounded cosines — on the injected-near-dup corpus and on adversarial
-    NULL/ragged/zero-norm vectors."""
-    import struct as _struct
-
-    from jsonschema_go_spark import queries_pipeline as qp
-    from jsonschema_go_spark.operators import similarity as sim
-
-    def key(df):
-        return sorted(
-            (r["id_a"], r["id_b"], _struct.pack("<d", r["cos"])) for r in df.collect()
-        )
-
-    corpus = qp._neardup_corpus(
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    )
-    kw = dict(dim=64, threshold=0.9, bands=16, rows_per_band=12)
-    a = key(sim.lsh_near_dup_pairs(corpus, "vec_id", "embedding", **kw))
-    b = key(
-        sim.lsh_near_dup_pairs(
-            corpus, "vec_id", "embedding", max_broadcast_vectors=0, **kw
-        )
-    )
-    assert a == b and len(a) == 50
-
-    rows = [
-        (0, [1.0] * 8), (1, [1.0] * 8), (2, None), (3, [-1.0] * 8),
-        (4, None), (5, [1.0, None] + [0.0] * 6), (6, [0.0] * 8),
-    ]
-    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    kw8 = dict(dim=8, threshold=0.9, bands=4, rows_per_band=4)
-    a = key(sim.lsh_near_dup_pairs(df, "vec_id", "embedding", **kw8))
-    b = key(sim.lsh_near_dup_pairs(df, "vec_id", "embedding", max_broadcast_vectors=0, **kw8))
-    assert a == b == key(
-        sim.lsh_near_dup_pairs(df, "vec_id", "embedding", max_broadcast_vectors=0, **kw8)
-    )
 
 
 def test_column_stats_exact_distinct_restructure(spark):
@@ -423,7 +265,7 @@ def test_shingle_staged_transform_matches_zipwith(spark):
     df = spark.createDataFrame(rows, "doc_id int, t string")
     for n in (2, 3, 4):
         old = df.where(F.col("t").isNotNull()).select(
-            "doc_id", F.explode(dd.word_shingles(F.col("t"), n)).alias("shingle")
+            "doc_id", F.explode(rf.word_shingles(F.col("t"), n)).alias("shingle")
         )
         new = dd.shingle_table(df, "doc_id", "t", n)
         assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
@@ -532,18 +374,3 @@ def test_patternproperties_hint_not_clobbered(spark):
     assert False in flat
 
 
-def test_vectorized_neardup_preserves_id_dtype(spark):
-    df = spark.createDataFrame(
-        [(0, [1.0] * 4), (4, [1.0] * 4)], "vec_id int, embedding array<double>"
-    )
-    out = sim.embedding_near_dup_pairs(
-        df, "vec_id", "embedding", threshold=0.9, sample_mod=4
-    )
-    assert out.schema.simpleString() == "struct<id_a:int,id_b:int,cos:double>"
-    dfl = spark.createDataFrame(
-        [(0, [1.0] * 4), (4, [1.0] * 4)], "vec_id long, embedding array<double>"
-    )
-    outl = sim.embedding_near_dup_pairs(
-        dfl, "vec_id", "embedding", threshold=0.9, sample_mod=4
-    )
-    assert outl.schema.simpleString() == "struct<id_a:bigint,id_b:bigint,cos:double>"
