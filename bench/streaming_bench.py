@@ -1,16 +1,13 @@
 #!/usr/bin/env python
-"""Streaming-path throughput bench (round 6): the 7 streaming modes are
-correctness-tested but were never timed. This measures turns/sec through the
-two interesting paths against their batch equivalents on the same staged
-transcript parquet:
+"""Streaming-path throughput bench: turns/sec through the two stream paths
+against their batch equivalents on the same staged transcript parquet:
 
 - ``violation_stream``   — stateless compiled predicates (pure JVM codegen;
   should track the batch violations pass, minus micro-batch overhead);
-- ``stateful_contiguity_stream`` — ``applyInPandasWithState``, the ONE
-  non-JVM surface in the engine (per-group Arrow→pandas→Arrow hop): its
-  ratio to the batch ``uniqueness.contiguity`` pass is the documented scale
-  ceiling for a 100 TB streaming backfill;
-- ``conversation_verdict_stream`` — JVM stateful aggregation (update mode).
+- ``conversation_verdict_stream`` — the per-conversation rollup verdict
+  (verdict, uniqueness and contiguity) as one update-mode stateful
+  aggregate, against the batch ``ValidationPlan.rollup``; timed with the
+  default HDFS-backed state store and with RocksDB.
 
 The stream is a file source split over many parquet files with
 ``maxFilesPerTrigger`` so availableNow runs a realistic multi-micro-batch
@@ -42,7 +39,6 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
@@ -57,15 +53,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from jsonschema_go_spark.compile import compile_table
-    from jsonschema_go_spark.operators.uniqueness import contiguity
     from jsonschema_go_spark.sources.transcripts import (
         generate_transcripts,
         transcript_table_rule,
     )
     from jsonschema_go_spark.streaming.validate_stream import (
-        contiguity_verdict_stream,
         conversation_verdict_stream,
-        stateful_contiguity_stream,
         violation_stream,
     )
 
@@ -131,25 +124,16 @@ def main() -> None:
     # batch equivalents
     timed("batch_violations", lambda: noop(
         plan.violations(batch, ["conv_id", "turn_idx"], ordered=False)))
-    timed("batch_contiguity", lambda: noop(
-        contiguity(batch, "conv_id", "turn_idx")))
     timed("batch_verdicts", lambda: noop(
-        plan.flags(batch, ["conv_id"]).groupBy("conv_id").agg(
-            # rule_ids contain dots — backtick-quote or Spark parses a
-            # struct-field extraction
-            *[F.min(F.col(f"`{c}`")).alias(c) for c in plan.rule_ids])))
+        plan.rollup(batch, "conv_id", "turn_idx")))
 
     # streaming paths (each timed run drains the full input from a fresh
     # checkpoint — micro-batch scheduling included, that's the point)
     timed("stream_violations", lambda: run_stream(
         lambda s: violation_stream(plan, s, ["conv_id", "turn_idx"]),
         "append", "viol"))
-    timed("stream_contiguity_pandas_state", lambda: run_stream(
-        lambda s: stateful_contiguity_stream(s), "update", "contig"))
-    timed("stream_contiguity_jvm", lambda: run_stream(
-        lambda s: contiguity_verdict_stream(s), "update", "contig_jvm"))
     timed("stream_verdicts", lambda: run_stream(
-        lambda s: conversation_verdict_stream(plan, s, "conv_id"),
+        lambda s: conversation_verdict_stream(plan, s, "conv_id", "turn_idx"),
         "update", "verd"))
 
     # RocksDB state store (bundled in Spark 4) + changelog checkpointing:
@@ -163,11 +147,8 @@ def main() -> None:
     }
     rocksdb_error = None
     try:
-        timed("stream_contiguity_jvm_rocksdb", lambda: run_stream(
-            lambda s: contiguity_verdict_stream(s), "update", "contig_jvm_rdb",
-            conf=_ROCKSDB_CONF))
         timed("stream_verdicts_rocksdb", lambda: run_stream(
-            lambda s: conversation_verdict_stream(plan, s, "conv_id"),
+            lambda s: conversation_verdict_stream(plan, s, "conv_id", "turn_idx"),
             "update", "verd_rdb", conf=_ROCKSDB_CONF))
     except Exception as ex:  # pragma: no cover - environment-dependent
         rocksdb_error = f"{type(ex).__name__}: {ex}"[:200]
@@ -180,20 +161,13 @@ def main() -> None:
         "files_per_trigger": args.files_per_trigger,
         "sec": timings,
         "turns_per_sec": {k: round(n_turns / v, 1) for k, v in timings.items()},
-        "pandas_state_vs_batch_ratio": round(
-            timings["stream_contiguity_pandas_state"] / timings["batch_contiguity"], 2
-        ),
-        "jvm_stream_vs_pandas_state_speedup": round(
-            timings["stream_contiguity_pandas_state"] / timings["stream_contiguity_jvm"], 2
-        ),
         "stream_violations_vs_batch_ratio": round(
             timings["stream_violations"] / timings["batch_violations"], 2
         ),
+        "stream_verdicts_vs_batch_ratio": round(
+            timings["stream_verdicts"] / timings["batch_verdicts"], 2
+        ),
     }
-    if "stream_contiguity_jvm_rocksdb" in timings:
-        line["rocksdb_vs_hdfs_contiguity_speedup"] = round(
-            timings["stream_contiguity_jvm"] / timings["stream_contiguity_jvm_rocksdb"], 2
-        )
     if "stream_verdicts_rocksdb" in timings:
         line["rocksdb_vs_hdfs_verdicts_speedup"] = round(
             timings["stream_verdicts"] / timings["stream_verdicts_rocksdb"], 2

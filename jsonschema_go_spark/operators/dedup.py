@@ -92,6 +92,11 @@ def shingle_table(
 
 # ----------------------------------------------------------- n-gram Jaccard
 
+#: capped shingle rows above which ``jaccard_pairs`` takes the join form
+#: instead of broadcasting the inverted index (the broadcast-memory guard)
+VECTORIZED_MAX_SHINGLE_ROWS = 100_000_000
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -99,7 +104,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int = 1000,
-    vectorized_max_shingle_rows: int = 100_000_000,
 ) -> DataFrame:
     """Doc pairs with word-n-gram Jaccard ≥ threshold →
     ``(id_a, id_b, common, n_a, n_b, jaccard)``.
@@ -115,7 +119,7 @@ def jaccard_pairs(
     Spark applies the exact round(…,6) + threshold filter, so emitted
     values and filter semantics are expression-identical to the join form
     (pytest-pinned bit-for-bit). Falls back to the join/aggregate form
-    when the capped shingle table exceeds ``vectorized_max_shingle_rows``
+    when the capped shingle table exceeds ``VECTORIZED_MAX_SHINGLE_ROWS``
     (the broadcast-index memory guard — the join form is the unbounded
     100 TB shape, like any broadcast-vs-shuffle join choice).
     """
@@ -125,7 +129,7 @@ def jaccard_pairs(
     # ReuseExchange can't help because there is no exchange to reuse
     sh = shingle_table(df, id_col, text_col, n).cache()
     n_rows = sh.count()  # materializes the cache; also the path probe
-    if n_rows == 0 or n_rows > vectorized_max_shingle_rows:
+    if n_rows == 0 or n_rows > VECTORIZED_MAX_SHINGLE_ROWS:
         return _jaccard_pairs_join(sh, id_col, threshold, max_shingle_freq)
     return _jaccard_pairs_vectorized(
         df.sparkSession, sh, id_col, threshold, max_shingle_freq
@@ -293,7 +297,7 @@ def _jaccard_pairs_vectorized(
     doc_off = np.concatenate(([0], np.cumsum(doc_lens)))
     # int32 index payloads: the broadcast is re-unpickled by every Python
     # worker per invocation — half the bytes, half that cost (doc/shingle
-    # counts are bounded by vectorized_max_shingle_rows << 2^31)
+    # counts are bounded by VECTORIZED_MAX_SHINGLE_ROWS << 2^31)
     bc = _supersede_broadcast(
         spark, f"jaccard_index:{id_col}",
         (
@@ -547,9 +551,9 @@ def lsh_candidate_pairs(
 _LAST_ROUNDS = 0
 
 #: the final converged edge set from the last DISTRIBUTED
-#: connected_components run (None when the local-finish cutoff produced a
-#: driver-local result) — the returned labels read it, so CC itself must
-#: keep it persisted; callers that re-materialize the labels can release it.
+#: connected_components run (a local-finish run leaves it as it was) — the
+#: returned labels read it, so CC itself must keep it persisted; callers that
+#: re-materialize the labels can release it.
 _LAST_EDGES = None
 
 
@@ -641,7 +645,6 @@ def connected_components(
         _LAST_ROUNDS = 0
         out = _local_finish(edges)
         _release_checkpoint(edges)
-        _park_edges(None, edges.sparkSession)
         return out
     prev = None
     converged = False
@@ -682,10 +685,10 @@ def connected_components(
             _LAST_ROUNDS = rounds
             out = _local_finish(edges)
             # the collect inside _local_finish was the last read of the
-            # contracted edge set — release it, and record that no
-            # distributed edge set backs the (driver-local) result
+            # contracted edge set — release it. A driver-local result parks
+            # nothing and leaves _LAST_EDGES alone: an earlier distributed
+            # result may still read the edge set parked there.
             _release_checkpoint(edges)
-            _park_edges(None, edges.sparkSession)
             return out
     _LAST_ROUNDS = rounds
     if not converged:
@@ -823,11 +826,10 @@ def _local_finish(edges: DataFrame) -> DataFrame:
 
 
 def _park_edges(edges, spark) -> None:
-    """Point ``_LAST_EDGES`` at this run's converged edge set (``None`` for
-    a driver-local result). A previous run's edge set still parked there is
-    superseded by definition, so it is released first — on every exit, or
-    a distributed run followed by a local-finish one pins it until session
-    end (the bare overwrite lost the only handle to it)."""
+    """Point ``_LAST_EDGES`` at ``edges`` (``None`` once the caller that
+    parked them has re-materialized its labels). The edge set parked there
+    before is superseded, so it is released first — the bare overwrite
+    would lose the only handle to it and pin it until session end."""
     global _LAST_EDGES
     if _LAST_EDGES is not None and _LAST_EDGES.sparkSession is spark:
         _release_checkpoint(_LAST_EDGES)

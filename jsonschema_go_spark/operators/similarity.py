@@ -484,28 +484,39 @@ def kmeans_centroids(
     """Lloyd k-means centroids (cosine assignment, mean update) → a k×dim
     Python list for :func:`ivf_index`'s ``centroids`` parameter.
 
-    Deterministic init: the k lowest-id vectors (same as the IVF default).
-    Each iteration is one :func:`_assign_carry` pass — the IVF's own cell
-    assignment, carrying the vector into the per-(cell, dim) mean — so only
-    the k×dim centroid matrix ever reaches the driver. Empty cells keep
-    their previous centroid. float mean is aggregation-order sensitive at
+    Deterministic init: the k lowest-id non-NULL vectors (same as the IVF
+    default); ``ValueError`` if their lengths differ. Each iteration is one
+    :func:`_assign_carry` pass — the IVF's own cell assignment, carrying the
+    vector into the per-(cell, dim) mean — so only the k×dim centroid matrix
+    ever reaches the driver. NULL vectors and vectors of another length are
+    assigned a cell but do not move its mean. Empty cells keep their
+    previous centroid. float mean is aggregation-order sensitive at
     the ulp level — consumers must not rely on bit-exact centroids across
     cluster layouts (cell ASSIGNMENT ties are broken by cell index, which is
     stable).
     """
     spark = df.sparkSession
     init = (
-        df.orderBy(id_col)
+        df.where(F.col(vec_col).isNotNull())
+        .orderBy(id_col)
         .limit(k)
         .select(F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"))
         .collect()
     )
     cents = [list(r["v"]) for r in init]
+    dims = {len(c) for c in cents}
+    if len(dims) > 1:
+        raise ValueError(
+            f"kmeans_centroids: the {len(cents)} lowest-id vectors of "
+            f"{vec_col!r} differ in length {sorted(dims)}; centroids need one dim"
+        )
+    dim = dims.pop() if dims else 0
     vecs = _vectors(df, id_col, vec_col)
     for _ in range(iters):
         cdf = spark.createDataFrame(list(enumerate(cents)), "cell int, _cent array<double>")
         means = (
             _assign_carry(vecs, "_id", "_v", cdf)
+            .where(F.size("_v") == dim)
             .select("cell", F.posexplode("_v").alias("_pos", "_x"))
             .groupBy("cell", "_pos")
             .agg(F.avg("_x").alias("_m"))

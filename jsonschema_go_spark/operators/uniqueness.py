@@ -28,9 +28,9 @@ def chain_invariant(
     n_rows − 1``, where ``n_rows`` counts every row of the group (NULL order
     values included) and ``n_distinct`` the distinct non-NULL values.
 
-    The ONE statement of the invariant: the batch :func:`contiguity`, the
-    bucket rollup (``ValidationPlan.rollup``) and both streaming forms
-    (``validate_stream``) all verdict through it, so they cannot drift."""
+    The ONE statement of the invariant: the batch :func:`contiguity` and
+    ``ValidationPlan.rollup`` (bucket and stream verdicts) both verdict
+    through it, so they cannot drift."""
     return (
         (n_rows == n_distinct)
         & (nulls == 0)

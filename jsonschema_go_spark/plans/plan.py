@@ -143,6 +143,59 @@ class _CheckColumns:
         return [F.col("partition_key"), order], per_pair, per_key, out
 
     @cached_property
+    def stream_rollup(self) -> Tuple[List[Column], List[Column], List[Column]]:
+        """(per-key state aggregates, run pass, :attr:`rollup`'s level-2
+        inputs) for a stream, which allows one aggregation. The state keeps
+        the key's order values (moments cannot stand in for them:
+        ``[0,0,3,4,4,5,5,7]`` matches all five moments of ``0..7``); ONE pass
+        over them sorted yields what the level-1 ``(key, order)`` groups
+        give: distinct values, rows in repeated values, the longest run."""
+        n_viol = F.col("_n_viol")
+        state = [
+            F.count(F.lit(1)).alias("rows"),
+            F.sum((n_viol > 0).cast("long")).alias("fail_rows"),
+            F.sum(n_viol).alias("violation_count"),
+            F.collect_list("_order").alias("_orders"),
+        ]
+        srt = F.array_sort("_orders")
+        zero = F.struct(
+            F.get(srt, 0).alias("first"),
+            F.get(srt, 0).alias("last"),
+            *[F.lit(0).cast("long").alias(f) for f in ("run", "d", "dup", "top")],
+        )
+
+        def step(acc: Column, x: Column) -> Column:
+            new = (acc["run"] == 0) | (x != acc["last"])
+            run = F.when(new, F.lit(1).cast("long")).otherwise(acc["run"] + 1)
+            return F.struct(
+                acc["first"].alias("first"),
+                x.alias("last"),
+                run.alias("run"),
+                (acc["d"] + new.cast("long")).alias("d"),
+                # a value's rows count once its run reaches 2
+                (acc["dup"] + F.when(run == 2, 2).when(run > 2, 1).otherwise(0)).alias("dup"),
+                F.greatest(acc["top"], run).alias("top"),
+            )
+
+        keep = [F.col(c) for c in ("partition_key", "rows", "fail_rows", "violation_count")]
+        runs = keep + [
+            (F.col("rows") - F.size("_orders")).alias("_nulls"),
+            F.aggregate(srt, zero, step).alias("_r"),
+        ]
+        r, nulls = F.col("_r"), F.col("_nulls")
+        per_key = keep + [
+            (F.col("fail_rows") == 0).alias("passed"),
+            (r["d"] + (nulls > 0).cast("long")).alias("distinct_keys"),
+            (r["dup"] + F.when(nulls > 1, nulls).otherwise(0)).alias("duplicate_rows"),
+            F.greatest(r["top"], nulls).alias("max_key_rows"),
+            r["d"].alias("_d"),
+            nulls,
+            r["first"].alias("_mn"),
+            r["last"].alias("_mx"),
+        ]
+        return state, runs, per_key
+
+    @cached_property
     def summary(self) -> Tuple[List[Column], List[Column], List[Column]]:
         """(wide aggregates, exploded ``(rule_id, fail_count)`` pairs, output)."""
         aggs = [

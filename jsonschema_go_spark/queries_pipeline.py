@@ -343,13 +343,16 @@ def q_dedup_corpus_end2end(spark: SparkSession, sf_dir: str) -> DataFrame:
     # N timed runs per session) keep session memory flat instead of
     # accumulating orphaned cache entries.
     corpus = _cluster_corpus(spark, sf_dir)
+    parked = dd._LAST_EDGES
     clusters = dd.duplicate_clusters(_cluster_pairs(corpus)).localCheckpoint(
         eager=True
     )
-    # the eager checkpoint above re-materialized the labels, so the CC
-    # run's converged edge set (when the distributed path produced one)
-    # has no remaining reader — release it now, not at session end
-    dd._park_edges(None, spark)
+    # the eager checkpoint above re-materialized the labels, so the edge set
+    # this CC run parked (the distributed path parks one, local finish none)
+    # has no remaining reader — release it now, not at session end. One
+    # parked by another caller may still back that caller's lazy labels.
+    if dd._LAST_EDGES is not parked:
+        dd._park_edges(None, spark)
     if (
         _E2E_LAST_CLUSTERS is not None
         and _E2E_LAST_CLUSTERS.sparkSession is spark

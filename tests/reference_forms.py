@@ -55,6 +55,69 @@ def seed_bucket_pass(
     return viol, verd, qual, (tot["r"] or 0, tot["v"] or 0)
 
 
+def stateful_contiguity_stream(
+    stream: DataFrame,
+    conv_col: str = "conv_id",
+    idx_col: str = "turn_idx",
+    start: int = 0,
+) -> DataFrame:
+    """The ``applyInPandasWithState`` per-conversation turn-chain stream →
+    ``(conv, rows, n_rows, min_idx, max_idx, contiguous)`` for an update-mode
+    sink: the cross-check the stream verdict's ``contiguous`` column is
+    pinned against, from state kept in Python instead of a JVM aggregate.
+
+    State per conversation is the exact distinct turn-index set plus a
+    counter of every row seen (NULL indices included): ``rows`` is the
+    distinct count, ``n_rows`` the row count, and the verdict is
+    :func:`~jsonschema_go_spark.operators.uniqueness.chain_invariant` over
+    them, projected on the JVM. The key field type comes from the input
+    schema, so a non-string conversation key round-trips through Arrow.
+    """
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    key_type = stream.schema[conv_col].dataType.simpleString()
+    stats_schema = (
+        f"{conv_col} {key_type}, rows long, n_rows long, nulls long, "
+        "min_idx int, max_idx int"
+    )
+    state_schema = "idxs array<int>, n_rows long, n_valid long"
+
+    def update(key, pdfs, state: "GroupState"):
+        import pandas as pd
+
+        seen, n_rows, n_valid = state.get if state.exists else ([], 0, 0)
+        seen = set(seen if seen is not None else [])
+        for pdf in pdfs:
+            idx = pdf[idx_col].dropna()
+            n_rows += len(pdf)
+            n_valid += len(idx)
+            seen.update(int(v) for v in idx.unique())
+        state.update((sorted(seen), n_rows, n_valid))
+        yield pd.DataFrame(
+            [
+                {
+                    conv_col: key[0],
+                    "rows": len(seen),
+                    "n_rows": n_rows,
+                    "nulls": n_rows - n_valid,
+                    "min_idx": min(seen) if seen else None,
+                    "max_idx": max(seen) if seen else None,
+                }
+            ]
+        )
+
+    stats = stream.groupBy(conv_col).applyInPandasWithState(
+        update, stats_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    )
+    return stats.select(
+        conv_col, "rows", "n_rows", "min_idx", "max_idx",
+        uq.chain_invariant(
+            F.col("n_rows"), F.col("rows"), F.col("nulls"),
+            F.col("min_idx"), F.col("max_idx"), start,
+        ).alias("contiguous"),
+    )
+
+
 def word_shingles(c: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the normalized text (array<string>)
     by ``zip_with`` over ``n-1`` shifted slices of the words array, then a

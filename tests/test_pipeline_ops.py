@@ -217,20 +217,21 @@ def test_duplicate_clusters_and_keep_list(spark):
     assert kept == [0, 1, 2, 4, 6]  # survivors + singletons; 3,5,7 dropped
 
 
-def test_connected_components_local_finish_releases_prior_edges(spark):
-    """A distributed run parks its converged edge set in ``_LAST_EDGES``; a
-    later local-finish run supersedes it and must release it, not just drop
-    the only handle (which pinned it until session end)."""
+def test_connected_components_local_finish_keeps_prior_edges(spark):
+    """A distributed run parks its converged edge set in ``_LAST_EDGES`` and
+    its lazy labels read it; a later local-finish run must leave it pinned,
+    so the earlier result still collects its labels."""
     jsc = spark.sparkContext._jsc.sc()
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "id_a long, id_b long"
     )
     dd.connected_components(chain).collect()  # local finish: nothing parked
     start = jsc.getPersistentRDDs().size()
-    dd.connected_components(chain, local_finish_threshold=0).collect()
+    first = dd.connected_components(chain, local_finish_threshold=0)
     assert jsc.getPersistentRDDs().size() == start + 1  # the parked edge set
     dd.connected_components(chain).collect()
-    assert jsc.getPersistentRDDs().size() == start
+    assert sorted(tuple(r) for r in first.collect()) == [(i, 0) for i in range(21)]
+    assert jsc.getPersistentRDDs().size() == start + 1
 
 
 # ------------------------------------------------------------ id types

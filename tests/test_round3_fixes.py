@@ -114,9 +114,7 @@ def test_staged_table_name_is_path_scoped(spark, tmp_path):
 # --------------------------------------- 4. streaming non-string conv keys
 
 def test_stateful_contiguity_long_keys(spark, tmp_path):
-    from jsonschema_go_spark.streaming.validate_stream import (
-        stateful_contiguity_stream,
-    )
+    from tests.reference_forms import stateful_contiguity_stream
 
     data_path = str(tmp_path / "in")
     df = spark.range(4).select(

@@ -445,6 +445,32 @@ def test_kmeans_survives_zero_vector(spark):
     assert len(cents) == 2 and all(len(c) == 2 for c in cents)
 
 
+@pytest.mark.parametrize(
+    "rows",
+    [
+        # a NULL vector among the k lowest ids
+        [(0, None), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 0.5])],
+        # a vector longer than the centroid dim
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [2.0, 0.0, 5.0]), (3, [1.0, 0.5])],
+    ],
+)
+def test_kmeans_centroids_skip_null_and_ragged_vectors(spark, rows):
+    """kmeans accepts what its cell assignment accepts: the init takes the k
+    lowest-id non-NULL vectors, and a NULL or other-length vector does not
+    enter a cell mean. Cell 0 = mean([1, 0], [1, 0.5]), cell 1 = [0, 1]."""
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = sim.kmeans_centroids(df, "vec_id", "embedding", k=2, iters=2)
+    assert cents == [[1.0, 0.25], [0.0, 1.0]]
+
+
+def test_kmeans_centroids_reject_ragged_init(spark):
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="differ in length"):
+        sim.kmeans_centroids(df, "vec_id", "embedding", k=2)
+
+
 # ------------------------------------------------------- stored IVF index
 
 def test_stored_ivf_matches_in_memory_and_prunes(spark, tmp_path):

@@ -99,114 +99,109 @@ def test_windowed_counts(stream_env):
     assert cols == {"window_start", "window_end", "rule_id", "violations"}
 
 
+def _final(spark, view, key, count):
+    """The last emission per key of an update-mode memory sink: each
+    micro-batch touching a key re-emits its row, with ``count`` grown."""
+    final = {}
+    for r in spark.sql(f"SELECT * FROM {view}").collect():
+        if r[key] not in final or r[count] > final[r[key]][count]:
+            final[r[key]] = r
+    return final
+
+
+def _assert_same_frame(got, want):
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_conversation_verdicts_stream(stream_env):
+    """Complete mode: the stream verdict table equals the batch
+    ``ValidationPlan.rollup`` in every column, schema included."""
     spark, batch, stream, plan, root = stream_env
     _run(
-        conversation_verdict_stream(plan, stream),
+        conversation_verdict_stream(plan, stream, "conv_id", "turn_idx"),
         "complete", root, "verd",
     )
-    got = spark.sql("SELECT * FROM verd")
-    want = plan.verdicts(batch, "conv_id").select(
-        F.col("partition_key").alias("conv_id"), "rows", "fail_rows", "passed"
+    _assert_same_frame(
+        spark.sql("SELECT * FROM verd"), plan.rollup(batch, "conv_id", "turn_idx")
     )
-    assert got.count() == want.count()
-    joined = got.join(want, "conv_id")
-    mismatches = joined.where(
-        (got["rows"] != want["rows"]) | (got["passed"] != want["passed"])
+
+
+def test_conversation_verdict_stream_equals_rollup_across_microbatches(spark, tmp_path):
+    """F1 transcripts with duplicated, NULL and skipped turn_idx, every
+    conversation (the hot one included) split over 3 files read one per
+    micro-batch: the final emission per conversation equals
+    ``plan.rollup(batch, "conv_id", "turn_idx")`` field by field."""
+    base = generate_transcripts(spark, num_convs=200, seed=7, violation_rate=0.2)
+    conv, turn = F.col("conv_id"), F.col("turn_idx")
+    c = [r[0] for r in base.select(conv).where(conv.startswith("c")).distinct()
+         .orderBy(conv).limit(36).collect()]
+    df = (
+        base.unionByName(base.where(conv.isin(c[1:21]) & (turn == 1)))
+        .unionByName(base.where(conv.isin(c[21:31]) & (turn == 1))
+                     .withColumn("turn_idx", F.lit(None).cast("int")))
+        .unionByName(base.where(conv.isin(c[31:36]) & (turn == 0))
+                     .withColumn("turn_idx", F.lit(50)))
     )
-    assert mismatches.count() == 0
+    data_path = str(tmp_path / "in")
+    for part in range(3):
+        df.where(F.pmod(F.coalesce(turn, F.lit(1)), F.lit(3)) == part).coalesce(1) \
+            .write.mode("append").parquet(data_path)
+    batch = spark.read.parquet(data_path)
+    plan = compile_table(transcript_table_rule(), batch.schema)
+    stream = (
+        spark.readStream.schema(batch.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(data_path)
+    )
+    out = conversation_verdict_stream(plan, stream, "conv_id", "turn_idx")
+    _run(out, "update", tmp_path, "verd_mb")
+    want = plan.rollup(batch, "conv_id", "turn_idx")
+    emitted = spark.sql("SELECT * FROM verd_mb").where(F.col("partition_key") == "c00000000")
+    assert emitted.count() == 3  # the hot conversation spans 3 micro-batches
+    final = spark.createDataFrame(
+        list(_final(spark, "verd_mb", "partition_key", "rows").values()), out.schema
+    )
+    _assert_same_frame(final, want)
+    # the fixture exercises what it claims
+    stats = want.agg(
+        F.sum((F.col("duplicate_rows") > 0).cast("int")),
+        F.sum((~F.col("contiguous")).cast("int")),
+    ).first()
+    assert stats[0] >= 20 and stats[1] >= 35
 
 
 def test_stateful_contiguity_stream(stream_env):
-    """applyInPandasWithState custom stateful operator: the final emitted
-    state per conversation must agree with the batch contiguity operator."""
+    """The ``applyInPandasWithState`` reference form equals the batch
+    contiguity operator field by field, and the stream verdict's
+    ``contiguous`` column equals both."""
     from jsonschema_go_spark.operators import uniqueness as uq
-    from jsonschema_go_spark.streaming.validate_stream import (
-        stateful_contiguity_stream,
-    )
+    from tests.reference_forms import stateful_contiguity_stream
 
     spark, batch, stream, plan, root = stream_env
     _run(
         stateful_contiguity_stream(stream, "conv_id", "turn_idx", start=0),
         "update", root, "stately",
     )
-    # update mode re-emits a conv's row each micro-batch; keep the last state
-    # (max rows) per conversation
-    got = (
-        spark.sql("SELECT * FROM stately")
-        .groupBy("conv_id")
-        .agg(
-            F.max("rows").alias("rows"),
-            F.max_by("contiguous", "rows").alias("contiguous"),
-        )
-    )
-    want = uq.contiguity(batch, "conv_id", "turn_idx", start=0)
-    assert got.count() == want.count()
-    j = got.join(want.withColumnRenamed("contiguous", "want_c"), "conv_id")
-    assert j.where(F.col("contiguous") != F.col("want_c")).count() == 0
-    assert got.where(~F.col("contiguous")).count() == want.where(~F.col("contiguous")).count()
-
-
-def test_contiguity_verdict_stream_jvm_equals_pandas_state(stream_env):
-    """The JVM update-mode aggregation form must emit the IDENTICAL final
-    per-conversation summary (rows/min/max/contiguous) as the
-    applyInPandasWithState form — and BOTH must agree with the batch
-    operator (r7: pinning against the batch operator, not just the sibling
-    stream, per the round-6 judge's finding that sibling-pinned equivalence
-    hid a shared unsound formula)."""
-    from jsonschema_go_spark.operators import uniqueness as uq
-    from jsonschema_go_spark.streaming.validate_stream import (
-        contiguity_verdict_stream,
-        stateful_contiguity_stream,
-    )
-
-    spark, batch, stream, plan, root = stream_env
     _run(
-        contiguity_verdict_stream(stream, "conv_id", "turn_idx", start=0),
-        "update", root, "contig_jvm",
+        conversation_verdict_stream(plan, stream, "conv_id", "turn_idx"),
+        "update", root, "verd_upd",
     )
-    _run(
-        stateful_contiguity_stream(stream, "conv_id", "turn_idx", start=0),
-        "update", root, "contig_pd",
-    )
-
-    def final_state(view):
-        # update mode re-emits a conv's row per micro-batch touching it;
-        # the final state is the row with the max rows count
-        return (
-            spark.sql(f"SELECT * FROM {view}")
-            .groupBy("conv_id")
-            .agg(
-                F.max("rows").alias("rows"),
-                F.max_by("min_idx", "rows").alias("min_idx"),
-                F.max_by("max_idx", "rows").alias("max_idx"),
-                F.max_by("contiguous", "rows").alias("contiguous"),
-            )
-        )
-
-    jvm, pd_ = final_state("contig_jvm"), final_state("contig_pd")
-    assert jvm.count() == pd_.count()
-    assert jvm.exceptAll(pd_).count() == 0 and pd_.exceptAll(jvm).count() == 0
-    # and both agree with the batch operator — field by field, not just the
-    # verdict: rows must equal the batch DISTINCT count (the exact-set
-    # state), min/max the batch min/max
-    want = uq.contiguity(batch, "conv_id", "turn_idx", start=0)
-    j = jvm.join(
-        want.select(
-            "conv_id",
-            F.col("n_distinct").alias("want_rows"),
-            F.col("min_val").alias("want_mn"),
-            F.col("max_val").alias("want_mx"),
-            F.col("contiguous").alias("want_c"),
-        ),
-        "conv_id",
-    )
-    assert j.where(
-        (F.col("contiguous") != F.col("want_c"))
-        | (F.col("rows") != F.col("want_rows"))
-        | (F.col("min_idx") != F.col("want_mn"))
-        | (F.col("max_idx") != F.col("want_mx"))
-    ).count() == 0
+    pd_ = _final(spark, "stately", "conv_id", "n_rows")
+    verd = _final(spark, "verd_upd", "partition_key", "rows")
+    want = {
+        r["conv_id"]: (r["n_distinct"], r["n_rows"], r["min_val"], r["max_val"], r["contiguous"])
+        for r in uq.contiguity(batch, "conv_id", "turn_idx", start=0).collect()
+    }
+    assert {
+        k: (r["rows"], r["n_rows"], r["min_idx"], r["max_idx"], r["contiguous"])
+        for k, r in pd_.items()
+    } == want
+    assert {k: r["contiguous"] for k, r in verd.items()} == {
+        k: w[-1] for k, w in want.items()
+    }
 
 
 @pytest.mark.parametrize(
@@ -224,17 +219,15 @@ def test_contiguity_verdict_stream_jvm_equals_pandas_state(stream_env):
     ],
 )
 def test_streaming_contiguity_sound_on_moment_collisions(spark, tmp_path, idxs):
-    """The round-6 judge's live repro: turn chains whose moments match a
-    contiguous series must be flagged contiguous=false by BOTH streaming
-    forms, exactly as the batch operator says (the round-6 moment check
-    returned true for the first two); likewise duplicate turns, which the
-    distinct set alone cannot see, and NULL turn indices. Field by field:
-    rows (distinct), n_rows, min, max and the verdict all equal batch."""
+    """Turn chains whose moments match a contiguous series, duplicate turns
+    (which the distinct set alone cannot see) and NULL turn indices: the
+    stream verdict's final emission equals the batch rollup field by field,
+    its ``contiguous`` equals ``uniqueness.contiguity``, and the pandas-state
+    reference form's rows (distinct), n_rows, min, max and verdict equal the
+    batch operator's."""
     from jsonschema_go_spark.operators import uniqueness as uq
-    from jsonschema_go_spark.streaming.validate_stream import (
-        contiguity_verdict_stream,
-        stateful_contiguity_stream,
-    )
+    from jsonschema_go_spark.rules import Rule, TableRule
+    from tests.reference_forms import stateful_contiguity_stream
 
     data_path = str(tmp_path / "in")
     rows = [("c0", i) for i in idxs]
@@ -242,19 +235,23 @@ def test_streaming_contiguity_sound_on_moment_collisions(spark, tmp_path, idxs):
         "overwrite"
     ).parquet(data_path)
     batch = spark.read.parquet(data_path)
+    plan = compile_table(
+        TableRule(columns={"turn_idx": Rule(minimum=1)}), batch.schema
+    )
     w = uq.contiguity(batch, "conv_id", "turn_idx", start=0).first()
-    want = (w["n_distinct"], w["n_rows"], w["min_val"], w["max_val"], w["contiguous"])
     stream = spark.readStream.schema(batch.schema).parquet(data_path)
-    for name, op in (
-        ("adv_jvm", contiguity_verdict_stream),
-        ("adv_pd", stateful_contiguity_stream),
-    ):
-        view = f"{name}_{abs(hash(tuple(idxs)))}"
-        _run(op(stream, "conv_id", "turn_idx", start=0), "update", tmp_path, view)
-        # the final state is the emission that has seen the most rows
-        g = max(spark.sql(f"SELECT * FROM {view}").collect(), key=lambda r: r["n_rows"])
-        got = (g["rows"], g["n_rows"], g["min_idx"], g["max_idx"], g["contiguous"])
-        assert got == want, (name, idxs, got, want)
+    tag = abs(hash(tuple(idxs)))
+    _run(conversation_verdict_stream(plan, stream, "conv_id", "turn_idx"),
+         "update", tmp_path, f"adv_verd_{tag}")
+    got = _final(spark, f"adv_verd_{tag}", "partition_key", "rows")["c0"]
+    assert tuple(got) == tuple(plan.rollup(batch, "conv_id", "turn_idx").first()), idxs
+    assert got["contiguous"] == w["contiguous"], idxs
+    _run(stateful_contiguity_stream(stream, "conv_id", "turn_idx", start=0),
+         "update", tmp_path, f"adv_pd_{tag}")
+    g = _final(spark, f"adv_pd_{tag}", "conv_id", "n_rows")["c0"]
+    got = (g["rows"], g["n_rows"], g["min_idx"], g["max_idx"], g["contiguous"])
+    want = (w["n_distinct"], w["n_rows"], w["min_val"], w["max_val"], w["contiguous"])
+    assert got == want, (idxs, got, want)
 
 
 def test_windowed_drift_matches_batch(stream_env):
