@@ -175,8 +175,7 @@ def test_conversation_verdict_stream_equals_rollup_across_microbatches(spark, tm
 
 def test_stateful_contiguity_stream(stream_env):
     """The ``applyInPandasWithState`` reference form equals the batch
-    contiguity operator field by field, and the stream verdict's
-    ``contiguous`` column equals both."""
+    contiguity operator field by field."""
     from jsonschema_go_spark.operators import uniqueness as uq
     from tests.reference_forms import stateful_contiguity_stream
 
@@ -185,12 +184,7 @@ def test_stateful_contiguity_stream(stream_env):
         stateful_contiguity_stream(stream, "conv_id", "turn_idx", start=0),
         "update", root, "stately",
     )
-    _run(
-        conversation_verdict_stream(plan, stream, "conv_id", "turn_idx"),
-        "update", root, "verd_upd",
-    )
     pd_ = _final(spark, "stately", "conv_id", "n_rows")
-    verd = _final(spark, "verd_upd", "partition_key", "rows")
     want = {
         r["conv_id"]: (r["n_distinct"], r["n_rows"], r["min_val"], r["max_val"], r["contiguous"])
         for r in uq.contiguity(batch, "conv_id", "turn_idx", start=0).collect()
@@ -199,9 +193,36 @@ def test_stateful_contiguity_stream(stream_env):
         k: (r["rows"], r["n_rows"], r["min_idx"], r["max_idx"], r["contiguous"])
         for k, r in pd_.items()
     } == want
-    assert {k: r["contiguous"] for k, r in verd.items()} == {
-        k: w[-1] for k, w in want.items()
+
+
+def test_contiguity_verdict_stream_jvm_equals_pandas_state(stream_env):
+    """The JVM update-mode verdict stream's final emission per conversation
+    has the same row count and ``contiguous`` verdict as the
+    ``applyInPandasWithState`` reference form, and both equal the batch
+    contiguity operator: pinned to the batch operator, not only to the
+    sibling stream, so a formula the two streams shared could not hide."""
+    from jsonschema_go_spark.operators import uniqueness as uq
+    from tests.reference_forms import stateful_contiguity_stream
+
+    spark, batch, stream, plan, root = stream_env
+    _run(
+        conversation_verdict_stream(plan, stream, "conv_id", "turn_idx"),
+        "update", root, "contig_jvm",
+    )
+    _run(
+        stateful_contiguity_stream(stream, "conv_id", "turn_idx", start=0),
+        "update", root, "contig_pd",
+    )
+    jvm = _final(spark, "contig_jvm", "partition_key", "rows")
+    pd_ = _final(spark, "contig_pd", "conv_id", "n_rows")
+    want = {
+        r["conv_id"]: (r["n_rows"], r["contiguous"])
+        for r in uq.contiguity(batch, "conv_id", "turn_idx", start=0).collect()
     }
+    assert {k: (r["rows"], r["contiguous"]) for k, r in jvm.items()} == want
+    assert {k: (r["n_rows"], r["contiguous"]) for k, r in pd_.items()} == want
+    # the fixture holds chains of both verdicts
+    assert {c for _, c in want.values()} == {True, False}
 
 
 @pytest.mark.parametrize(
