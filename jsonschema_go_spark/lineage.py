@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .plans.plan import VIOLATION_COLS
+from .sizing import _input_bytes, sub_bucket_count
 from .sources.io import TableIO
 
 LINEAGE_SCHEMA = T.StructType([
@@ -73,8 +74,6 @@ QUALITY_SCHEMA = T.StructType([
 ])
 
 
-#: staged sub-buckets of an input whose size the optimizer does not know
-UNSIZED_SUB_BUCKETS = 8
 #: file in the staged table's directory that records its sub-bucket count
 #: (a leading ``_`` hides it from Spark's file listing)
 SUB_BUCKETS_FILE = "_sub_buckets"
@@ -83,36 +82,6 @@ SUB_BUCKETS_FILE = "_sub_buckets"
 def bucket_expr(key_col: str, num_buckets: int) -> F.Column:
     """Explicit conv_id hash-bucketing (SURVEY.md §2.3)."""
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets)).cast("int")
-
-
-def _input_bytes(df: DataFrame) -> Optional[int]:
-    """The optimizer's size estimate of ``df`` (``stats.sizeInBytes`` of
-    its optimized plan: file bytes for a file scan), or None when a leaf of
-    the plan has no statistics and reports ``spark.sql.defaultSizeInBytes``
-    — an estimate derived from that placeholder means nothing."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
-    leaves = plan.collectLeaves()
-    for i in range(leaves.size()):
-        if int(str(leaves.apply(i).stats().sizeInBytes())) >= unknown:
-            return None
-    return int(str(plan.stats().sizeInBytes()))
-
-
-def sub_bucket_count(
-    size: Optional[int], num_buckets: int, max_split: int, open_cost: int, parallelism: int
-) -> int:
-    """Spark storage buckets per staged bucket for an input of ``size``
-    bytes (None: unknown → :data:`UNSIZED_SUB_BUCKETS`), sized like Spark's
-    file splits (``FilePartition.maxSplitBytes``): a split is
-    ``bytes_per_bucket / parallelism``, at least ``open_cost`` and at most
-    ``max_split``, and a bucket gets one storage bucket per split. Ceiling
-    divisions, so a mid-sized bucket gets exactly ``parallelism``."""
-    if size is None:
-        return UNSIZED_SUB_BUCKETS
-    per_bucket = -(-size // num_buckets)
-    split = max(1, min(max_split, max(open_cost, -(-per_bucket // parallelism))))
-    return max(1, -(-per_bucket // split))
 
 
 def _local_frame(spark: SparkSession, schema: T.StructType, rows: Sequence[tuple]) -> DataFrame:

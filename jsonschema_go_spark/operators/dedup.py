@@ -13,16 +13,21 @@ Scale design (100 TB):
 - **MinHash+LSH**: signatures are lexicographic MINs of md5(shingle ⊕ seed) —
   a valid MinHash family (any injective hash works; md5 hex strings compare
   lexicographically identically in Spark and DuckDB, making the oracle
-  exact). Banding turns candidate generation into an equi-join on band keys:
+  exact). Banding turns candidate generation into one grouping on band keys:
   shuffle is O(docs × bands), never O(docs²).
 - **SimHash**: 64-bit signature from per-word md5s; bit b comes from hex
   digit b//4 of the word hash (arithmetic-only extraction so the identical
   computation runs in DuckDB). Near-dup = signatures within Hamming
-  distance k, candidate-generated by exact-match on 4 16-bit chunks
+  distance k, candidate-generated by grouping on 4 16-bit chunks
   (pigeonhole: hamming ≤ 3 ⇒ ≥1 chunk equal).
 - **embedding cosine**: see operators/similarity.py; near-dup = cos ≥ τ.
 
-All implementations are pure DataFrame ops — no Python in the hot path.
+Shingling, banding, candidate grouping, verification and connected
+components are DataFrame operations. Three steps run Python over Arrow
+batches (``mapInArrow``): the MinHash and SimHash signatures and the
+vectorized Jaccard pair count. Signature kernels run on the input's own
+partitions unless its bytes call for more tasks
+(:func:`..sizing.kernel_input`).
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sizing import kernel_input
 from .text import normalize
 
 
@@ -432,7 +438,6 @@ def minhash_table(
     need no global state, so the map stays narrow (no shuffle at all for
     signatures) and scales embarrassingly at 100 TB.
     """
-    spark = df.sparkSession
     import pyarrow as pa
 
     id_dt = df.schema[id_col].dataType.simpleString()
@@ -483,9 +488,8 @@ def minhash_table(
                 out_cols, names=["_id"] + [f"mh{i}" for i in range(k)]
             )
 
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
     base = (
-        _words_staged(df.repartition(n_parts), id_col, text_col)
+        _words_staged(kernel_input(df), id_col, text_col)
         .select(F.col(id_col).alias("_id"), _shingles_of_words(n).alias("_shingles"))
         .where(F.size("_shingles") > 0)
     )
@@ -506,23 +510,20 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """MinHash-LSH candidate pairs → ``(id_a, id_b)`` (distinct).
 
-    Band keys are md5 of the concatenated in-band signature; candidate
-    generation is a self-equi-join on (band_idx, band_key) — shuffle
-    O(docs × bands). Verify candidates with :func:`jaccard_pairs` semantics
-    downstream (LSH gives recall; verification gives precision).
+    Band keys are md5 of the concatenated in-band signature; candidates are
+    the ``id_a < id_b`` pairs inside each ``(band_idx, band_key)`` group —
+    one grouping of the banded signatures (:func:`_pairs_within`), shuffle
+    O(docs × bands). Any shared band makes a candidate; NULL ids make none.
+    Verify candidates with :func:`jaccard_pairs` semantics downstream (LSH
+    gives recall; verification gives precision).
 
-    The signature table is ``localCheckpoint``-ed ONCE (r7): the round-6
-    plan shows the whole shingle-explode → 12-way min aggregation computed
-    TWICE, once per self-join side — the in-code claim that ReuseExchange
-    shares it was false (plan-verified: 0 ReusedExchange nodes). The
-    checkpoint is one row per doc (ids + 12 hex strings) and supersedes the
-    previous invocation's copy, so session memory stays flat.
+    The signature table has one consumer, so it is computed once without a
+    checkpoint; the returned DataFrame holds no persisted state and stays
+    valid whatever later calls do.
     """
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
-    mh = _supersede_checkpoint(
-        f"lsh_mh:{id_col}", minhash_table(df, id_col, text_col, num_hashes, n)
-    )
+    mh = minhash_table(df, id_col, text_col, num_hashes, n)
     band_structs = []
     for bidx in range(bands):
         cols = [F.col(f"mh{bidx * rows_per_band + j}") for j in range(rows_per_band)]
@@ -535,13 +536,26 @@ def lsh_candidate_pairs(
     banded = mh.select(
         F.col(id_col), F.explode(F.array(*band_structs)).alias("b")
     ).select(F.col(id_col), F.col("b.band_idx"), F.col("b.band_key"))
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_key")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_key")
+    pairs = _pairs_within(
+        banded, ["band_idx", "band_key"], F.struct(F.col(id_col).alias("i"))
+    )
+    return pairs.select(
+        F.col("a.i").alias("id_a"), F.col("b.i").alias("id_b")
+    ).distinct()
+
+
+def _pairs_within(df: DataFrame, keys: list, member: Column) -> DataFrame:
+    """Every pair of ``member`` structs inside a ``keys`` group with
+    ``a.i < b.i`` → ``(a, b)``: the members are collected per group and each
+    one pairs with the larger members of its own list. Equal to the
+    self-equi-join on ``keys`` filtered to ``id_a < id_b`` (NULL ids pair with
+    nothing), from one shuffle of the keyed rows."""
     return (
-        a.join(b, ["band_idx", "band_key"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        df.groupBy(*keys)
+        .agg(F.collect_list(member).alias("_m"))
+        .where(F.size("_m") > 1)
+        .select(F.explode("_m").alias("a"), "_m")
+        .select("a", F.explode(F.filter("_m", lambda x: x["i"] > F.col("a")["i"])).alias("b"))
     )
 
 
@@ -891,7 +905,6 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     import pyarrow as pa
 
-    spark = df.sparkSession
     id_dt = df.schema[id_col].dataType.simpleString()
 
     def sign(batches):
@@ -954,8 +967,7 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 names=["_id", "simhash_hex"],
             )
 
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    staged = _words_staged(df.repartition(n_parts), id_col, text_col).select(
+    staged = _words_staged(kernel_input(df), id_col, text_col).select(
         F.col(id_col).alias("_id"), F.col("_w")
     )
     out = staged.mapInArrow(sign, f"_id {id_dt}, simhash_hex string")
@@ -970,17 +982,13 @@ def simhash_near_pairs(
 
     Pigeonhole candidate generation: split the 16-hex-digit signature into 4
     chunks of 4 digits; hamming ≤ 3 ⇒ at least one chunk is byte-equal ⇒
-    equi-join per chunk (4 joins unioned, shuffle O(docs × 4)), then exact
-    hamming verification on the candidates.
-
-    The signature table is ``localCheckpoint``-ed ONCE (r7): the round-6
-    plan computed the full word-explode → 64-sum SimHash aggregation TWICE,
-    once per self-join side (the broadcast build side cannot reuse the
-    probe side's shuffle exchange — plan-verified). One row per doc.
+    the candidates are the ``id_a < id_b`` pairs inside each
+    ``(chunk_idx, chunk)`` group (:func:`_pairs_within`, one grouping,
+    shuffle O(docs × 4)), then exact hamming verification on the candidates.
+    The signature table has one consumer and is computed once, with no
+    checkpoint.
     """
-    sig = _supersede_checkpoint(
-        f"simhash_sig:{id_col}", simhash64(df, id_col, text_col)
-    )
+    sig = simhash64(df, id_col, text_col)
     # r7: the exact-hamming verification is two `bit_count` calls over the
     # signature parsed ONCE per doc into two 32-bit halves (conv(hex, 16,
     # 10) — each half ≤ 2^32, safely in a long). The round-6 form extracted
@@ -1011,18 +1019,14 @@ def simhash_near_pairs(
             ])
         ).alias("c"),
     ).select(F.col(id_col), "_hi", "_lo", F.col("c.chunk_idx"), F.col("c.chunk"))
-    a = chunks.select(
-        F.col(id_col).alias("id_a"), F.col("_hi").alias("_hi_a"),
-        F.col("_lo").alias("_lo_a"), "chunk_idx", "chunk",
-    )
-    b = chunks.select(
-        F.col(id_col).alias("id_b"), F.col("_hi").alias("_hi_b"),
-        F.col("_lo").alias("_lo_b"), "chunk_idx", "chunk",
-    )
+    member = F.struct(F.col(id_col).alias("i"), "_hi", "_lo")
     cand = (
-        a.join(b, ["chunk_idx", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "_hi_a", "_lo_a", "_hi_b", "_lo_b")
+        _pairs_within(chunks, ["chunk_idx", "chunk"], member)
+        .select(
+            F.col("a.i").alias("id_a"), F.col("b.i").alias("id_b"),
+            F.col("a._hi").alias("_hi_a"), F.col("a._lo").alias("_lo_a"),
+            F.col("b._hi").alias("_hi_b"), F.col("b._lo").alias("_lo_b"),
+        )
         .distinct()
     )
     ham = (

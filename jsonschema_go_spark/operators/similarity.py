@@ -7,7 +7,8 @@ left fold* in index order, so the double-precision result is deterministic
 and bit-comparable with an oracle that folds in the same order.
 
 The Arrow kernels (sampled near-dup audit, LSH candidate verification, IVF
-cell assignment) share ONE numpy cosine: :func:`_seq_dot` replays that fold
+cell assignment, and the IVF top-k pass that assigns cells and scores the
+probed pairs in one map) share ONE numpy cosine: :func:`_seq_dot` replays that fold
 one dimension at a time (``acc = acc + a_j * b_j``), :func:`_np_seq_norms`
 is the square root of a vector's fold with itself, and :func:`_seq_cos`
 applies the SQL form's zero-norm guard (−1.0) and cross-length rule (NULL).
@@ -15,7 +16,9 @@ Each double equals the SQL expression's bit for bit (pytest-pinned against
 the interpreted forms), so a kernel changes the cost of a query, never one
 output bit. Vectors reach the kernel through one grouping,
 :func:`_by_len`: an Arrow list column → one float64 matrix per vector
-length, gathered from the flat values buffer with no per-row Python.
+length, gathered from the flat values buffer with no per-row Python. Each
+kernel runs on its input's own partitions unless the input's bytes call for
+more tasks (:func:`..sizing.kernel_input`).
 
 Scale notes:
 - brute force is O(Q × N) after broadcasting the Q query vectors — the right
@@ -32,6 +35,8 @@ from typing import NamedTuple, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..sizing import kernel_input
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -107,6 +112,7 @@ class _Grouped(NamedTuple):
     pos: object  # per row: index inside its length group
     norms: object  # per row: _np_seq_norms, NaN for a NULL vector
     groups: dict  # length -> (row indices, (rows, length) float64 matrix)
+    holes: object  # per row: the vector holds a NULL element
 
 
 def _by_len(vecs) -> _Grouped:
@@ -125,9 +131,14 @@ def _by_len(vecs) -> _Grouped:
         .to_numpy(zero_copy_only=False)
         .astype(np.int64)
     )
-    flat = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    flat_arr = vecs.flatten()
+    flat = flat_arr.to_numpy(zero_copy_only=False).astype(np.float64)
     sizes = np.maximum(lens, 0)
     starts = np.cumsum(sizes) - sizes
+    holes = np.zeros(len(lens), dtype=bool)
+    if flat_arr.null_count:
+        owner = np.repeat(np.arange(len(lens)), sizes)
+        holes[owner[flat_arr.is_null().to_numpy(zero_copy_only=False)]] = True
     pos = np.zeros(len(lens), dtype=np.int64)
     norms = np.full(len(lens), np.nan)
     groups = {}
@@ -137,7 +148,7 @@ def _by_len(vecs) -> _Grouped:
         pos[rows] = np.arange(len(rows))
         norms[rows] = _np_seq_norms(mat)
         groups[ln] = (rows, mat)
-    return _Grouped(lens, pos, norms, groups)
+    return _Grouped(lens, pos, norms, groups, holes)
 
 
 def _pair_cos(a: _Grouped, ia, b: _Grouped, ib):
@@ -290,7 +301,6 @@ def embedding_near_dup_pairs(
     """
     import numpy as np
 
-    spark = df.sparkSession
     id_dt = df.schema[id_col].dataType.simpleString()
     side = _vectors(df.where(F.col(id_col) % sample_mod == 0), id_col, vec_col)
     bc = _broadcast_vectors(side, f"neardup_sample:{id_col}")
@@ -320,8 +330,7 @@ def embedding_near_dup_pairs(
                 np.concatenate(coss),
             )
 
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    scored = side.repartition(n_parts).mapInArrow(
+    scored = kernel_input(side).mapInArrow(
         score, f"id_a {id_dt}, id_b {id_dt}, _rawcos double"
     )
     return _round_filter(scored, threshold)
@@ -598,16 +607,57 @@ def ivf_index(
     )
 
 
+class _Cents(NamedTuple):
+    """A collected centroid table (:func:`_centroids`)."""
+
+    cells: object  # int32 cell ids, ascending
+    vecs: object  # their vectors, an Arrow list array in cell order
+    assign: Optional[tuple]  # (cells, C, cn) for _nearest_cells, or None
+
+
+def _centroids(cents_df: DataFrame) -> _Cents:
+    """Collect a ``(cell, _cent)`` table once, in cell order. ``assign`` is
+    set when the numpy argmax can replay the JVM one: at least one centroid,
+    none NULL or holding a NULL element, all of one length."""
+    import numpy as np
+
+    tbl = cents_df.select("cell", "_cent").toArrow()
+    cells = tbl.column(0).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int32)
+    order = np.argsort(cells, kind="stable")
+    vecs = tbl.column(1).combine_chunks().take(order)
+    cells = cells[order]
+    g = _by_len(vecs)
+    if g.holes.any() or len(g.groups) != 1 or (g.lens < 0).any():
+        return _Cents(cells, vecs, None)
+    (cmat,) = [m for _, m in g.groups.values()]
+    return _Cents(cells, vecs, (cells, cmat, g.norms))
+
+
+def _nearest_cells(g: _Grouped, cells, C, cn):
+    """Nearest-centroid cell of each row of ``g``: :func:`_seq_cos` against
+    every centroid, first maximum (the lowest cell among ties; a NaN sim
+    wins). A row of another length, a NULL vector or an all-NaN row takes
+    the lowest cell."""
+    import numpy as np
+
+    out = np.full(len(g.lens), cells[0], dtype=np.int32)
+    if C.shape[1] in g.groups:
+        rows, V = g.groups[C.shape[1]]
+        sims = _seq_cos(V[:, None], C[None], g.norms[rows][:, None], cn[None])
+        out[rows] = cells[np.argmax(sims, axis=1)]
+    return out
+
+
 def _assign_carry(
     df: DataFrame, id_col: str, vec_col: str, cents_df: DataFrame
 ) -> DataFrame:
     """Nearest-centroid (cosine) cell of every vector, carrying the vector →
     ``(cell, id_col, vec_col)``; ``cents_df`` is ``(cell, _cent)``.
 
-    The tiny centroid table is collected and broadcast, and each task scores
-    its Arrow batch with :func:`_seq_cos` and picks ``np.argmax`` per row
-    (r7: replaced 320k interpreted HOF folds at sf1.0, ~2.8 s → ~0.6 s for
-    the index build). The result equals :func:`_argmax_carry`'s
+    The tiny centroid table is collected once and shipped with the kernel,
+    and each task scores its Arrow batch with :func:`_nearest_cells` (r7:
+    replaced 320k interpreted HOF folds at sf1.0, ~2.8 s → ~0.6 s for the
+    index build). The result equals :func:`_argmax_carry`'s
     ``max_by(struct)`` aggregate: first-max ties == (max sim, lowest cell);
     NaN sims win on both engines (Spark orders NaN above all doubles); rows
     whose sims are all NULL in the JVM form (NULL vector, NULL element,
@@ -615,56 +665,42 @@ def _assign_carry(
     an all-NaN or unscored row does here. Centroid tables the replay can't
     guarantee (NULL/ragged centroid vectors) take :func:`_argmax_carry`.
     """
-    import numpy as np
     import pyarrow as pa
 
-    from .dedup import _supersede_broadcast
-
-    spark = df.sparkSession
-    cents = sorted((int(r["cell"]), r["_cent"]) for r in cents_df.collect())
-    vec_lists = [c for _, c in cents]
-    if (
-        not cents
-        or any(v is None or None in v for v in vec_lists)
-        or len({len(v) for v in vec_lists}) != 1
-    ):
-        vecs = df.select(
-            F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_vn")
-        )
-        centn = cents_df.withColumn("_centn", norm(F.col("_cent")))
-        return _argmax_carry(vecs, id_col, vec_col, centn, "cell")
-    cmat = np.array(vec_lists, dtype=np.float64)
-    cells = np.array([c for c, _ in cents], dtype=np.int32)
-    bc = _supersede_broadcast(
-        spark, f"ivf_cents:{id_col}", (cells, cmat, _np_seq_norms(cmat))
-    )
+    cents = _centroids(cents_df)
+    if cents.assign is None:
+        return _jvm_assign(df, id_col, vec_col, cents_df)
+    assign = cents.assign
     id_dt = df.schema[id_col].dataType.simpleString()
     vec_dt = df.schema[vec_col].dataType.simpleString()
 
-    def assign(batches):
-        cells, C, cn = bc.value
+    def kernel(batches):
         for batch in batches:
             ids, vecs = batch.column(0), batch.column(1)
-            g = _by_len(vecs)
-            out = np.full(len(ids), cells[0], dtype=np.int32)
-            if C.shape[1] in g.groups:
-                rows, V = g.groups[C.shape[1]]
-                sims = _seq_cos(V[:, None], C[None], g.norms[rows][:, None], cn[None])
-                out[rows] = cells[np.argmax(sims, axis=1)]
+            cell = _nearest_cells(_by_len(vecs), *assign)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out), ids, vecs], names=["cell", "_id", "_vec"]
+                [pa.array(cell), ids, vecs], names=["cell", "_id", "_vec"]
             )
 
-    n_parts = max(spark.sparkContext.defaultParallelism, 1)
-    staged = df.repartition(n_parts).select(
+    staged = kernel_input(df).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
     )
-    out = staged.mapInArrow(assign, f"cell int, _id {id_dt}, _vec {vec_dt}")
+    out = staged.mapInArrow(kernel, f"cell int, _id {id_dt}, _vec {vec_dt}")
     return out.select(
         F.col("cell"),
         F.col("_id").alias(id_col),
         F.col("_vec").alias(vec_col),
     )
+
+
+def _jvm_assign(
+    df: DataFrame, id_col: str, vec_col: str, cents_df: DataFrame
+) -> DataFrame:
+    """:func:`_argmax_carry` over ``df`` and ``cents_df`` with the norms
+    hoisted → ``(cell, id_col, vec_col)``."""
+    vecs = df.select(F.col(id_col), F.col(vec_col), norm(F.col(vec_col)).alias("_vn"))
+    centn = cents_df.withColumn("_centn", norm(F.col("_cent")))
+    return _argmax_carry(vecs, id_col, vec_col, centn, "cell")
 
 
 def _cents_df(
@@ -695,7 +731,8 @@ def _cents_df(
 def _ivf_probes(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
     """Each query's ``n_probe`` nearest cells → ``(query_id, _qv, _qn,
     cell)``, from the query side ``(query_id, _qv, _qn)`` and the centroid
-    table ``(cell, _cent)``."""
+    table ``(cell, _cent)`` — the JVM probe choice, taken when a query's
+    centroid sims hold a NULL or NaN (:func:`_probe_cells`)."""
     wq = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("cell"))
     return (
         F.broadcast(q)
@@ -710,25 +747,138 @@ def _ivf_probes(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
     )
 
 
-def _score_probed(
-    probes: DataFrame, index: DataFrame, id_col: str, vec_col: str, k: int
+class _Probes(NamedTuple):
+    """Probed cells of a set of query rows: query row ``row[i]`` searches
+    cell ``cell[i]``."""
+
+    ids: object  # Arrow array: the query id of each query row
+    vecs: object  # Arrow list array: the vector of each query row
+    row: object  # int64 per probe
+    cell: object  # int32 per probe
+
+
+def _probe_cells(q_ids, q_vecs, cents: _Cents, n_probe: int) -> Optional[_Probes]:
+    """Each query's ``n_probe`` cells, chosen on the driver with
+    :func:`_seq_cos` in the JVM order of :func:`_ivf_probes`: sim desc, then
+    cell asc, over all rows of a query id. None when a sim is NaN: numpy
+    cannot tell a SQL NULL (sorted last) from a NaN (sorted first)."""
+    import numpy as np
+
+    nq, nc = len(q_ids), len(cents.cells)
+    qa, ca = np.divmod(np.arange(nq * nc), max(nc, 1))
+    sims = _pair_cos(_by_len(q_vecs), qa, _by_len(cents.vecs), ca).reshape(nq, nc)
+    if np.isnan(sims).any():
+        return None
+    rows, cells = [], []
+    by_id: dict = {}
+    for j, qid in enumerate(q_ids.to_pylist()):
+        by_id.setdefault(qid, []).append(j)
+    for members in by_id.values():
+        m = np.array(members, dtype=np.int64)
+        s = sims[m].ravel()
+        rr, cc = np.repeat(m, nc), np.tile(cents.cells, len(m))
+        top = np.lexsort((rr, cc, -s))[:n_probe]
+        rows.append(rr[top])
+        cells.append(cc[top])
+    return _Probes(
+        q_ids, q_vecs,
+        np.concatenate(rows or [np.zeros(0, np.int64)]),
+        np.concatenate(cells or [np.zeros(0, np.int32)]),
+    )
+
+
+def _jvm_probes(q: DataFrame, cents_df: DataFrame, n_probe: int) -> _Probes:
+    """:func:`_ivf_probes`, collected: one query row per probe."""
+    import numpy as np
+
+    tbl = _ivf_probes(q, cents_df, n_probe).select("query_id", "_qv", "cell").toArrow()
+    n = tbl.num_rows
+    return _Probes(
+        tbl.column(0).combine_chunks(), tbl.column(1).combine_chunks(),
+        np.arange(n, dtype=np.int64),
+        tbl.column(2).combine_chunks().to_numpy(zero_copy_only=False).astype(np.int32),
+    )
+
+
+def _ivf_scan(
+    rows: DataFrame, id_col: str, vec_col: str, probes: _Probes, assign: Optional[tuple], k: int
 ) -> DataFrame:
-    """Exact cosine of each probe's query against its cell's index rows,
-    best score per (query, neighbor) across probes, ranked → top-k."""
-    scored = (
-        probes.join(index.withColumn("_in", norm(F.col(vec_col))), "cell")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                _safe_ratio(dot(F.col("_qv"), F.col(vec_col)), F.col("_qn"), F.col("_in")), 6
-            ).alias("cos"),
-        )
+    """One ``mapInArrow`` over the index rows ``(id_col, vec_col[, cell])``
+    → the top-k of each query → ``(query_id, neighbor_id, rank, cos)``.
+
+    Each row's cell is :func:`_nearest_cells` when ``assign`` is given, else
+    the row's ``cell`` column. For every probed ``(query row, index row)``
+    pair with ``id ≠ query id`` the kernel emits the raw cosine
+    :func:`_seq_cos`, NULL exactly where the SQL ``cosine`` is NULL (a NULL
+    vector, a NULL element, a length other than the query's with non-zero
+    norms) and NaN where it is NaN. Spark then applies ``round(…, 6)``, the
+    best score per ``(query, neighbor)`` across probes and
+    :func:`_rank_topk`."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    id_dt = rows.schema[id_col].dataType.simpleString()
+    qid_dt = from_arrow_type(probes.ids.type).simpleString()
+    pcells = np.unique(probes.cell)
+    hit = np.zeros((len(probes.ids), len(pcells)), dtype=bool)
+    hit[probes.row, np.searchsorted(pcells, probes.cell)] = True
+    qg = _by_len(probes.vecs)
+    q_self = pc.index_in(probes.ids, value_set=probes.ids).to_numpy(zero_copy_only=False)
+    q_ids = probes.ids
+
+    def kernel(batches):
+        for batch in batches:
+            ids, vecs = batch.column(0), batch.column(1)
+            g = _by_len(vecs)
+            if assign is not None:
+                cell = _nearest_cells(g, *assign)
+            else:
+                cell = batch.column(2).to_numpy(zero_copy_only=False)
+            probed = np.isin(cell, pcells)
+            sel = np.zeros((len(cell), len(q_ids)), dtype=bool)
+            sel[probed] = hit[:, np.searchsorted(pcells, cell[probed])].T
+            own = pc.index_in(ids.cast(q_ids.type), value_set=q_ids).fill_null(-1)
+            sel &= own.to_numpy(zero_copy_only=False)[:, None] != q_self[None]
+            sel &= ids.is_valid().to_numpy(zero_copy_only=False)[:, None]
+            cos = np.full(sel.shape, np.nan)
+            null = np.ones(sel.shape, dtype=bool)
+            for ln, (ri, V) in g.groups.items():
+                for qln, (qi, Q) in qg.groups.items():
+                    blk = np.ix_(ri, qi)
+                    vn, qn = g.norms[ri][:, None], qg.norms[qi][None]
+                    if ln == qln:
+                        cos[blk] = _seq_cos(V[:, None], Q[None], vn, qn)
+                        null[blk] = False
+                    else:
+                        # zip_with null-pads across lengths: NULL, unless a
+                        # zero norm trips the -1.0 guard first
+                        denom = vn * qn
+                        cos[blk] = np.where(denom == 0.0, -1.0, np.nan)
+                        null[blk] = denom != 0.0
+            null[g.holes] = True
+            null[:, qg.holes] = True
+            ri, qj = np.nonzero(sel)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    q_ids.take(pa.array(qj, type=pa.int64())),
+                    ids.take(pa.array(ri, type=pa.int64())),
+                    pa.array(cos[ri, qj], type=pa.float64(), mask=null[ri, qj]),
+                ],
+                names=["query_id", "neighbor_id", "_rawcos"],
+            )
+
+    cols = [F.col(id_col), F.col(vec_col)] + ([] if assign is not None else [F.col("cell")])
+    scored = rows.select(*cols).mapInArrow(
+        kernel, f"query_id {qid_dt}, neighbor_id {id_dt}, _rawcos double"
+    )
+    best = (
+        scored.select("query_id", "neighbor_id", F.round("_rawcos", 6).alias("cos"))
         .groupBy("query_id", "neighbor_id")  # a neighbor may match via several probes
         .agg(F.max("cos").alias("cos"))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(best, k)
 
 
 def ivf_topk(
@@ -748,11 +898,28 @@ def ivf_topk(
     :func:`cosine_topk` exactly (tested); smaller probes trade recall for a
     ``n_probe/n_cells`` fraction of the scan — the 100 TB path where cells
     are storage buckets and unprobed buckets are never read.
+
+    The centroids and the query vectors are collected once; the probes are
+    picked on the driver (:func:`_probe_cells`, or :func:`_ivf_probes` when
+    a sim is NULL or NaN); ONE Arrow pass over ``df`` assigns each row its
+    cell (:func:`_assign_carry`'s argmax) and scores the probed pairs
+    (:func:`_ivf_scan`). The interpreted join-and-fold form it replaced is
+    the ground truth in ``tests/reference_forms.py``.
     """
-    index = ivf_index(df, id_col, vec_col, n_cells, centroids)
-    cents = _cents_df(df, id_col, vec_col, n_cells, centroids)
-    q = _queries(df.where(F.col(id_col).isin(*list(query_ids))), id_col, vec_col)
-    return _score_probed(_ivf_probes(q, cents, n_probe), index, id_col, vec_col, k)
+    cents_df = _cents_df(df, id_col, vec_col, n_cells, centroids)
+    cents = _centroids(cents_df)
+    q = df.where(F.col(id_col).isin(*list(query_ids)))
+    tbl = q.select(id_col, vec_col).toArrow()
+    probes = _probe_cells(
+        tbl.column(0).combine_chunks(), tbl.column(1).combine_chunks(), cents, n_probe
+    )
+    if probes is None:
+        probes = _jvm_probes(_queries(q, id_col, vec_col), cents_df, n_probe)
+    if cents.assign is None:
+        rows = _jvm_assign(df, id_col, vec_col, cents_df)
+    else:
+        rows = kernel_input(df)
+    return _ivf_scan(rows, id_col, vec_col, probes, cents.assign, k)
 
 
 def write_ivf_index(
@@ -838,10 +1005,12 @@ def ivf_topk_stored(
     neighbor_id, rank, cos)``. Matches :func:`ivf_topk` exactly for the same
     centroid layout (pytest-asserted, including the pruned-scan plan).
 
-    The tiny probe table (≤ ``len(query_ids) × n_probe`` rows) is collected
-    ONCE and re-issued as a local DataFrame — both to turn the probed cells
-    into a literal ``IN`` predicate (storage-level partition pruning) and so
-    the probe subplan is never evaluated twice. Pass ``query_vectors`` as
+    The centroids and query vectors are collected once and the probes are
+    picked on the driver (:func:`_probe_cells`, or :func:`_ivf_probes` when
+    a sim is NULL or NaN); the probed cells become a literal ``IN``
+    predicate (storage-level partition pruning), and ONE Arrow pass over
+    those partitions scores the probed pairs from their stored ``cell``
+    (:func:`_ivf_scan`). Pass ``query_vectors`` as
     ``[(id, [floats...]), ...]`` when the queries are held externally (the
     production shape); without it the query vectors are resolved through the
     ``_ids/`` sidecar (id→cell, co-written by :func:`write_ivf_index`): the
@@ -849,12 +1018,18 @@ def ivf_topk_stored(
     queries' own cell partitions — both scans are pruned, never a full-index
     read.
     """
+    import pyarrow as pa
+
     index = spark.read.parquet(path)
-    cents = spark.read.parquet(f"{path}/_centroids")
+    cents_df = spark.read.parquet(f"{path}/_centroids")
     if query_vectors is not None:
+        q_ids = pa.array([int(i) for i, _ in query_vectors], type=pa.int64())
+        q_vecs = pa.array(
+            [[float(x) for x in v] for _, v in query_vectors], type=pa.list_(pa.float64())
+        )
         q = _queries(
             spark.createDataFrame(
-                [(int(i), [float(x) for x in v]) for i, v in query_vectors],
+                list(zip(q_ids.to_pylist(), q_vecs.to_pylist())),
                 "query_id long, _qv array<double>",
             ),
             "query_id",
@@ -862,12 +1037,15 @@ def ivf_topk_stored(
         )
     else:
         q = _stored_query_lookup(spark, path, id_col, vec_col, query_ids)
-    probes_plan = _ivf_probes(q, cents, n_probe)
-    probe_rows = probes_plan.collect()  # tiny; evaluated exactly once
-    probes = spark.createDataFrame(probe_rows, probes_plan.schema)
-    cells = sorted({r["cell"] for r in probe_rows})
-    return _score_probed(
-        F.broadcast(probes), index.where(F.col("cell").isin(cells)), id_col, vec_col, k
+        tbl = q.select("query_id", "_qv").toArrow()
+        q_ids, q_vecs = tbl.column(0).combine_chunks(), tbl.column(1).combine_chunks()
+    cents = _centroids(cents_df)
+    probes = _probe_cells(q_ids, q_vecs, cents, n_probe)
+    if probes is None:
+        probes = _jvm_probes(q, cents_df, n_probe)
+    cells = sorted(set(probes.cell.tolist()))
+    return _ivf_scan(
+        index.where(F.col("cell").isin(cells)), id_col, vec_col, probes, None, k
     )
 
 

@@ -12,6 +12,7 @@ hashes values under sorted column names).
 
 from __future__ import annotations
 
+import os
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +41,21 @@ def _register(name: str, fn: Callable, sql: str = None) -> None:
 
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    """A table's parquet file, its schema taken from the file footer on the
+    driver: ``spark.read.parquet`` without a schema runs a one-task Spark
+    job to read the same footer. Timestamps without a zone read as
+    ``TIMESTAMP_NTZ`` exactly when Spark's own inference would
+    (``spark.sql.parquet.inferTimestampNTZ.enabled``). A path that is not a
+    local file (a directory, a remote store) is read with inference."""
+    path = f"{sf_dir}/{table}.parquet"
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=ntz.lower() == "true")
+    return spark.read.schema(schema).parquet(path)
 
 
 # ===========================================================================

@@ -175,13 +175,15 @@ def conversation_verdict_stream(
 
     A stream allows one aggregation, so the rollup's two levels become one
     aggregate per conversation (``_CheckColumns.stream_rollup``) that ends
-    in the rollup's own output select. The key has no event-time column, so
-    no watermark applies; a query checkpointed by an older form of this
+    in the rollup's own output select. The output takes each column's
+    nullability from the rollup over the same schema, so the two schemas
+    are equal as ``StructType``s. The key has no event-time column, so no
+    watermark applies; a query checkpointed by an older form of this
     aggregate needs a fresh checkpoint."""
     cols = plan._cols
     state, runs, per_key = cols.stream_rollup
     *_, out = cols.rollup
-    return (
+    verdicts = (
         stream.select(
             F.col(conv_col).alias("partition_key"),
             F.col(idx_col).alias("_order"),
@@ -193,3 +195,19 @@ def conversation_verdict_stream(
         .select(*per_key)
         .select(*out)
     )
+    want = plan.rollup(stream, conv_col, idx_col).schema
+    return verdicts.select(*[
+        _nullable_as(F.col(w.name), have.nullable, w).alias(w.name)
+        for w, have in zip(want, verdicts.schema)
+    ])
+
+
+def _nullable_as(c, nullable: bool, want):
+    """``c`` with the nullability of field ``want``: a CASE without ELSE is
+    nullable; COALESCE with a literal is not (the column it wraps never
+    holds a NULL)."""
+    if want.nullable and not nullable:
+        return F.when(c.isNotNull(), c)
+    if nullable and not want.nullable:
+        return F.coalesce(c, F.lit(0).cast(want.dataType))
+    return c

@@ -253,3 +253,50 @@ def near_dup_pairs_cartesian(
         )
         .where(F.col("cos") >= threshold)
     )
+
+
+def score_probed(
+    probes: DataFrame, index: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact cosine of each probe's query against its cell's index rows as
+    the interpreted join + ``zip_with`` fold, best score per (query,
+    neighbor) across probes, ranked → top-k. ``probes`` is
+    ``similarity._ivf_probes`` output, ``index`` has ``(cell, id, vec)``.
+    The ground truth the one-pass ``similarity._ivf_scan`` is pinned
+    against."""
+    scored = (
+        probes.join(index.withColumn("_in", sim.norm(F.col(vec_col))), "cell")
+        .where(F.col("query_id") != F.col(id_col))
+        .select(
+            "query_id",
+            F.col(id_col).alias("neighbor_id"),
+            F.round(
+                sim._safe_ratio(
+                    sim.dot(F.col("_qv"), F.col(vec_col)), F.col("_qn"), F.col("_in")
+                ),
+                6,
+            ).alias("cos"),
+        )
+        .groupBy("query_id", "neighbor_id")  # a neighbor may match via several probes
+        .agg(F.max("cos").alias("cos"))
+    )
+    return sim._rank_topk(scored, k)
+
+
+def ivf_topk_join(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    query_ids: Sequence,
+    k: int = 5,
+    n_cells: int = 16,
+    n_probe: int = 4,
+    centroids: Optional[list] = None,
+) -> DataFrame:
+    """``similarity.ivf_topk`` as the JVM probe window over a broadcast
+    cross-join plus :func:`score_probed` over the IVF index: the form the
+    one-pass IVF top-k replaced."""
+    index = sim.ivf_index(df, id_col, vec_col, n_cells, centroids)
+    cents = sim._cents_df(df, id_col, vec_col, n_cells, centroids)
+    q = sim._queries(df.where(F.col(id_col).isin(*list(query_ids))), id_col, vec_col)
+    return score_probed(sim._ivf_probes(q, cents, n_probe), index, id_col, vec_col, k)

@@ -168,7 +168,7 @@ def test_sub_bucket_count_from_bytes():
     (maxPartitionBytes 128 MB, openCostInBytes 4 MB, 4 cores): 1 for the
     benchmark's ~311 KB buckets, 8 without size statistics, one per
     maxPartitionBytes split for 25 GB buckets, and one per core between."""
-    from jsonschema_go_spark.lineage import sub_bucket_count
+    from jsonschema_go_spark.sizing import sub_bucket_count
 
     mb = 1 << 20
     confs = dict(max_split=128 * mb, open_cost=4 * mb, parallelism=4)

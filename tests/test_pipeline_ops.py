@@ -4,6 +4,7 @@ properties, simhash bounds, multimodal Arrow plumbing."""
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -232,6 +233,33 @@ def test_connected_components_local_finish_keeps_prior_edges(spark):
     dd.connected_components(chain).collect()
     assert sorted(tuple(r) for r in first.collect()) == [(i, 0) for i in range(21)]
     assert jsc.getPersistentRDDs().size() == start + 1
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="ROADMAP A2/C: the second DISTRIBUTED connected_components call's "
+    "_park_edges releases the edge set the first call's lazy labels read "
+    "(CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); a RunScope that owns the edge sets fixes it",
+)
+def test_connected_components_two_distributed_calls_keep_first_labels(spark):
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)], "id_a long, id_b long"
+    )
+    first = dd.connected_components(chain, local_finish_threshold=0)
+    dd.connected_components(chain, local_finish_threshold=0).collect()
+    assert sorted(tuple(r) for r in first.collect()) == [(i, 0) for i in range(21)]
+
+
+def test_lsh_candidate_pairs_survive_a_later_call(spark):
+    """A lazy lsh_candidate_pairs result stays valid after a second call
+    (ROADMAP A2): the band grouping holds no checkpoint that the later call
+    could release."""
+    docs = spark.read.parquet(f"{os.path.dirname(SF_DIR)}/sf0.01/documents.parquet")
+    first = dd.lsh_candidate_pairs(docs, "doc_id", "text")
+    dd.lsh_candidate_pairs(docs.where(F.col("doc_id") % 2 == 0), "doc_id", "text").collect()
+    got = sorted(tuple(r) for r in first.collect())
+    assert len(got) == 26
+    assert got == sorted(tuple(r) for r in dd.lsh_candidate_pairs(docs, "doc_id", "text").collect())
 
 
 # ------------------------------------------------------------ id types

@@ -363,10 +363,11 @@ PLAN_PINS = {
         "windows": 0, "shuffle_joins": 2,
     },
     "dedup_simhash_pairs": {
-        # r7: signature agg checkpointed once (was computed per join side);
-        # remaining plan = pigeonhole chunk equi-join (bc) over the
-        # checkpoint + bit_count hamming — NO window, NO shuffle join
-        "shuffle_exchanges": 1, "broadcast_joins": 1,
+        # signature Arrow map on the scan's own partitions, then ONE
+        # (chunk_idx, chunk) grouping for the candidates + their distinct;
+        # no checkpoint, so the whole query is this plan — NO join, NO
+        # window (was: checkpointed signatures + broadcast chunk self-join)
+        "shuffle_exchanges": 2, "broadcast_joins": 0,
         "windows": 0, "shuffle_joins": 0,
     },
     "dedup_jaccard_documents": {
@@ -377,17 +378,19 @@ PLAN_PINS = {
         "windows": 0, "shuffle_joins": 0,
     },
     "dedup_minhash_documents": {
-        # r7: Arrow signature map checkpointed; band explode + equi-join +
-        # distinct + orderBy remain
-        "shuffle_exchanges": 2, "broadcast_joins": 1,
+        # signature Arrow map on the scan's own partitions, band explode,
+        # ONE (band_idx, band_key) grouping + distinct + orderBy; no
+        # checkpoint, so the whole query is this plan (was: checkpointed
+        # signatures + broadcast band self-join)
+        "shuffle_exchanges": 3, "broadcast_joins": 0,
         "windows": 0, "shuffle_joins": 0,
     },
     "ann_ivf_topk_embeddings": {
-        # r7: index assignment is an Arrow map (no window; separately
-        # pinned by test_ivf_index_build_plan_no_window); windows are the
-        # probe-side and final per-query top-k ranks only
-        "shuffle_exchanges": 1, "broadcast_joins": 1,
-        "windows": 3, "shuffle_joins": 0,
+        # one Arrow pass assigns cells and scores the driver-picked probes;
+        # the (query, neighbor) max and the final per-query rank remain
+        # (was: probe window over a broadcast cross-join + cell join + rank)
+        "shuffle_exchanges": 2, "broadcast_joins": 0,
+        "windows": 1, "shuffle_joins": 0,
     },
 }
 

@@ -552,3 +552,151 @@ def test_stored_ivf_ids_sidecar_prunes_both_lookup_modes(spark, tmp_path):
     b = sorted(map(tuple, by_vec.collect()))
     c = sorted(map(tuple, want.collect()))
     assert a == b == c
+
+
+# ------------------------------------------------- one-pass IVF top-k
+
+_N = float("nan")
+
+#: fixtures for the IVF pass vs the join form: (rows, query ids, n_cells,
+#: n_probe, centroids). Default centroids are the n_cells lowest-id rows.
+_IVF_CASES = {
+    "null_vectors": (
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0]),
+         (4, None), (5, [0.9, 0.1, 0.0]), (6, None), (7, [0.1, 0.2, 0.9])],
+        [5, 7], 3, 2, None,
+    ),
+    "null_elements": (
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0]),
+         (4, [1.0, None, 0.5]), (5, [0.9, 0.1, 0.0]), (6, [None, None, None])],
+        [5, 1], 3, 3, None,
+    ),
+    "nan_elements": (
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0]),
+         (4, [_N, 1.0, 0.0]), (5, [0.9, 0.1, 0.0]), (6, [0.0, 0.0, 0.0])],
+        [5, 2], 3, 3, None,
+    ),
+    "zero_vectors": (
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0]), (4, [0.0, 0.0]),
+         (5, [0.6, 0.8])],
+        [3, 5], 2, 1, None,
+    ),
+    "ragged_vectors": (
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [1.0, 1.0]),
+         (4, [0.0, 0.0]), (5, [0.5, 0.5, 0.5, 0.5]), (6, [0.3, 0.3, 0.9])],
+        [6, 1], 2, 2, None,
+    ),
+    "duplicate_ids": (
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.7, 0.7]), (3, [0.9, 0.1]),
+         (4, [0.2, 0.9]), (4, [0.8, 0.6]), (5, [0.5, 0.5])],
+        [4, 5], 2, 1, None,
+    ),
+    "tied_sims": (
+        [(1, [1.0, 1.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0]), (4, [2.0, 2.0]),
+         (5, [3.0, 0.1])],
+        [1, 4], 2, 1, [[1.0, 0.0], [0.0, 1.0]],
+    ),
+    # a query whose centroid sims hold a NULL or NaN takes the JVM probes
+    "fallback_null_query": (
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, None), (4, [0.5, 0.5]),
+         (5, [1.0, None]), (6, [0.9, 0.2])],
+        [3, 5, 6], 2, 1, None,
+    ),
+    "fallback_nan_query": (
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [_N, 1.0]), (4, [0.5, 0.5])],
+        [3, 4], 2, 1, None,
+    ),
+    "fallback_ragged_centroids": (
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.4, 0.6]), (4, [0.5, 0.5])],
+        [3, 4], 2, 1, None,
+    ),
+}
+
+
+def _canon(rows):
+    import math
+
+    return sorted(
+        tuple("NaN" if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in rows
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_IVF_CASES))
+@pytest.mark.parametrize("id_kind", ["long", "string"])
+def test_ivf_pass_equals_join_form(spark, case, id_kind, monkeypatch):
+    """The one-pass IVF top-k equals the join-and-fold form row for row
+    (NULL and NaN scores included) on NULL, NULL-element, NaN, zero, ragged
+    and duplicate-id vectors, string ids, and tied probe sims; a NULL or NaN
+    centroid sim takes the JVM probe choice, and only then."""
+    rows, qids, n_cells, n_probe, cents = _IVF_CASES[case]
+    if id_kind == "string":
+        rows = [(f"v{i}", v) for i, v in rows]
+        qids = [f"v{i}" for i in qids]
+    df = spark.createDataFrame(rows, f"vec_id {id_kind}, embedding array<double>")
+    calls = []
+    jvm_probes = sim._jvm_probes
+    monkeypatch.setattr(
+        sim, "_jvm_probes", lambda *a: calls.append(1) or jvm_probes(*a)
+    )
+    kw = dict(k=3, n_cells=n_cells, n_probe=n_probe, centroids=cents)
+    got = sim.ivf_topk(df, "vec_id", "embedding", qids, **kw)
+    want = rf.ivf_topk_join(df, "vec_id", "embedding", qids, **kw)
+    assert got.schema == want.schema
+    assert _canon(got.collect()) == _canon(want.collect())
+    assert bool(calls) == case.startswith("fallback"), calls
+
+
+def test_stored_ivf_pass_equals_join_form_on_nulls(spark, tmp_path):
+    """The stored IVF pass reads each row's stored cell: on NULL vectors,
+    NULL elements and ragged rows it equals the join form over the same
+    stored index and centroids, for both query lookup modes."""
+    rows, qids = _IVF_CASES["null_elements"][:2]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = str(tmp_path / "ivf")
+    sim.write_ivf_index(df, "vec_id", "embedding", path, n_cells=3)
+    index = spark.read.parquet(path)
+    cents = spark.read.parquet(f"{path}/_centroids")
+    q = sim._queries(index.where(F.col("vec_id").isin(qids)), "vec_id", "embedding")
+    want = _canon(rf.score_probed(sim._ivf_probes(q, cents, 2), index, "vec_id", "embedding", 3).collect())
+    by_id = sim.ivf_topk_stored(spark, path, "vec_id", "embedding", qids, k=3, n_probe=2)
+    assert _canon(by_id.collect()) == want
+    qvecs = [(r["vec_id"], list(r["embedding"])) for r in df.where(F.col("vec_id").isin(qids)).collect()]
+    by_vec = sim.ivf_topk_stored(
+        spark, path, "vec_id", "embedding", qids, k=3, n_probe=2, query_vectors=qvecs
+    )
+    assert _canon(by_vec.collect()) == want
+
+
+def test_ivf_topk_equals_join_form_at_sf001(spark):
+    """Probe-limited IVF top-k on the sf0.01 embeddings equals the join form
+    (n_probe < n_cells, default and k-means centroids)."""
+    df = spark.read.parquet(f"{TESTDATA}/sf0.01/embeddings.parquet")
+    qids = [0, 7, 100, 333]
+    cents = sim.kmeans_centroids(df, "vec_id", "embedding", k=8, iters=2)
+    for c in (None, cents):
+        kw = dict(k=5, n_cells=8, n_probe=3, centroids=c)
+        got = sim.ivf_topk(df, "vec_id", "embedding", qids, **kw).collect()
+        want = rf.ivf_topk_join(df, "vec_id", "embedding", qids, **kw).collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_arrow_kernels_keep_input_partitions(spark):
+    """Under one file split the Arrow kernels run on the scan's own
+    partitions: no round-robin shuffle in front of minhash, simhash, the
+    near-dup audit or the IVF assignment."""
+    from jsonschema_go_spark.operators import dedup as dd
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    plans = {
+        "minhash_table": dd.minhash_table(docs, "doc_id", "text"),
+        "simhash64": dd.simhash64(docs, "doc_id", "text"),
+        "embedding_near_dup_pairs": sim.embedding_near_dup_pairs(
+            emb, "vec_id", "embedding", 0.3, sample_mod=4
+        ),
+        "ivf_index": sim.ivf_index(emb, "vec_id", "embedding", n_cells=8),
+    }
+    for name, out in plans.items():
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan, (name, plan)

@@ -159,6 +159,7 @@ def test_conversation_verdict_stream_equals_rollup_across_microbatches(spark, tm
     out = conversation_verdict_stream(plan, stream, "conv_id", "turn_idx")
     _run(out, "update", tmp_path, "verd_mb")
     want = plan.rollup(batch, "conv_id", "turn_idx")
+    assert out.schema == want.schema
     emitted = spark.sql("SELECT * FROM verd_mb").where(F.col("partition_key") == "c00000000")
     assert emitted.count() == 3  # the hot conversation spans 3 micro-batches
     final = spark.createDataFrame(
